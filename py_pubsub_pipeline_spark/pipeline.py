@@ -375,8 +375,11 @@ class MorUpsertSink:
         for c in live:
             d = _read_data(c["data"]).withColumn(
                 "__seq", F.lit(c["seq"]).cast("long"))
+            # by NAME, as a set: the by-name parquet read and
+            # unionByName resolve a reordered commit correctly
             want = c.get("fields")
-            if want is not None and want != data_schema.fieldNames():
+            if want is not None and set(want) != set(
+                    data_schema.fieldNames()):
                 raise ValueError(
                     f"MoR schema drift at seq {c['seq']}: commit "
                     f"recorded columns {want} but the snapshot "

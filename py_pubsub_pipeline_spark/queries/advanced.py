@@ -15,6 +15,11 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import dsum, sql_dsum
 from ..functions.ckpt import DISK as _DISK
+from ..functions.graphs import (
+    SQL_PURCHASE_EDGES,
+    SUPP_OFFSET,
+    sql_purchase_pairs,
+)
 from ..registry import query
 from ..tables import table
 
@@ -275,18 +280,16 @@ def agg_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RC_DEPTH = 2  # recursion bound: supplier seeds -> customers -> suppliers
 
 
-@query(
-    "subq_recursive_cte",
-    oracle=f"""
+def _rc_sql(prefix: str = "") -> str:
+    """The statement both engines run; `prefix` names the tables
+    (Spark reads them through per-call `rc_*` views)."""
+    return f"""
     WITH RECURSIVE eb AS (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      {sql_purchase_pairs(prefix)}),
     edges AS (
-      SELECT cust AS u, supp + 10000000 AS v FROM eb
-      UNION ALL
-      SELECT supp + 10000000 AS u, cust AS v FROM eb),
+      {SQL_PURCHASE_EDGES}),
     seeds AS (
-      SELECT s_suppkey + 10000000 AS node FROM supplier
+      SELECT s_suppkey + {SUPP_OFFSET} AS node FROM {prefix}supplier
       WHERE s_nationkey = 0),
     reach(node, depth) AS (
       SELECT node, 0 FROM seeds
@@ -298,8 +301,10 @@ _RC_DEPTH = 2  # recursion bound: supplier seeds -> customers -> suppliers
     SELECT CAST(depth AS INT) AS dist, COUNT(*) AS n_nodes
     FROM (SELECT node, MIN(depth) AS depth FROM reach GROUP BY node)
     GROUP BY depth
-    """,
-)
+    """
+
+
+@query("subq_recursive_cte", oracle=_rc_sql())
 def subq_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (WITH RECURSIVE, Spark 4): bounded-depth BFS over
     the customer<->supplier purchase graph from the nation-0 supplier
@@ -331,28 +336,7 @@ def subq_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.createOrReplaceTempView("rc_orders")
     li.createOrReplaceTempView("rc_lineitem")
     s.createOrReplaceTempView("rc_supplier")
-    return spark.sql(f"""
-    WITH RECURSIVE eb AS (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM rc_orders JOIN rc_lineitem ON l_orderkey = o_orderkey),
-    edges AS (
-      SELECT cust AS u, supp + 10000000 AS v FROM eb
-      UNION ALL
-      SELECT supp + 10000000 AS u, cust AS v FROM eb),
-    seeds AS (
-      SELECT s_suppkey + 10000000 AS node FROM rc_supplier
-      WHERE s_nationkey = 0),
-    reach(node, depth) AS (
-      SELECT node, 0 FROM seeds
-      UNION ALL
-      SELECT DISTINCT e.v, r.depth + 1
-      FROM reach r JOIN edges e ON e.u = r.node
-      WHERE r.depth < {_RC_DEPTH}
-    )
-    SELECT CAST(depth AS INT) AS dist, COUNT(*) AS n_nodes
-    FROM (SELECT node, MIN(depth) AS depth FROM reach GROUP BY node)
-    GROUP BY depth
-    """)
+    return spark.sql(_rc_sql("rc_"))
 
 
 @query(

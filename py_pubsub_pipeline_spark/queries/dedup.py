@@ -21,11 +21,8 @@ Scale notes:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.ckpt import DISK as _CKPT_DISK
 from ..functions.splitwin import split_window, str_bucket
@@ -145,51 +142,16 @@ def _gram_hashes() -> F.Column:
     )
 
 
-# Cross-query shingle sharing (opt-in): several near-dup operators
-# start from the identical (doc_id, h) hashed-shingle relation, but
-# Spark's ReusedExchange only dedups WITHIN one query plan — a basket
-# or pipeline running the capped and uncapped passes over the same
-# corpus re-tokenizes and re-hashes it once per query.  A production
-# multi-pass curation DAG materializes that intermediate once (cache,
-# or a staged table); share_shingles() is that feature: while the
-# context is open, every _hashed_shingles() consumer for the same
-# sf_dir reads the persisted relation (8-byte hashes + doc ids — the
-# narrowest possible spill unit, MEMORY_AND_DISK so an executor that
-# can't hold its slice degrades to local disk, never OOM).  Off by
-# default so single-query plans, plan gates, and oracle parity are
-# byte-identical with and without the feature.
-_SHINGLE_CACHE: dict[str, DataFrame] = {}
-
-
-@contextmanager
-def share_shingles(spark: SparkSession, sf_dir: str):
-    """Materialize the hashed-shingle relation once for every
-    consumer inside the context.  The persist is LAZY — the first
-    consumer pays the build, exactly like any staged intermediate —
-    and is dropped on exit."""
-    d = table(spark, sf_dir, "documents")
-    df = d.select("doc_id", F.explode(_gram_hashes()).alias("h")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SHINGLE_CACHE[sf_dir] = df
-    try:
-        yield df
-    finally:
-        _SHINGLE_CACHE.pop(sf_dir, None)
-        df.unpersist()
-
-
 def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h): one row per distinct hashed shingle per doc.
-    Served from the share_shingles() materialization when one is
-    open for this sf_dir.
 
     Deliberately NOT widened (tables.widen_scan) — the r14 widen was
     re-adjudicated in r15 (VERDICT r14 item 1): two same-session
-    interleaved A/B probes at sf0.1 driver conditions
-    (scripts/ab_ngram_widen.py) could not reproduce the r14 15-25%
-    win — pooled mins capped 1.412 s (no widen) vs 1.616 s (widen),
-    jaccard a wash (1.615 vs 1.540) — and the r14 driver's own run
+    interleaved A/B probes at sf0.1 driver conditions, widened form
+    as of commit 73c972b vs this narrow scan (OPTIMIZATION_r15.md
+    item 1 records them), could not reproduce the r14 15-25% win —
+    pooled mins capped 1.412 s (no widen) vs 1.616 s (widen), jaccard
+    a wash (1.615 vs 1.540) — and the r14 driver's own run
     had the widened pair 2.5x slower.  Unlike the minhash kernels
     (16-32 md5 MINs per shingle, where _shingles(wide=True) is an
     unambiguous win), the xxhash64 explode here is light per byte:
@@ -199,9 +161,6 @@ def _hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan needs anyway.  On a production many-split scan both forms
     are identical (widen_scan no-ops), so this is purely the honest
     local plan."""
-    cached = _SHINGLE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
     d = table(spark, sf_dir, "documents")
     return d.select("doc_id", F.explode(_gram_hashes()).alias("h"))
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.graphs import SQL_COPURCHASE_CTES, copurchase_edges
 from ..registry import query
 from ..tables import table
 from .rag import _SQL_COS, _cos_micro, _probe_pool
@@ -613,21 +614,12 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- neighbor-Jaccard link prediction ---------------------------------------
 JLP_TOPK = 20
-JLP_MINW = 2  # co-purchase weight floor (the graph family's edge rule)
 
 
 @query(
     "graph_jaccard_linkpred",
     oracle=f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {JLP_MINW}
-    ), deg AS MATERIALIZED (
+    WITH {SQL_COPURCHASE_CTES}, deg AS MATERIALIZED (
       SELECT u AS z, COUNT(*) AS d FROM e GROUP BY u
     ), wedge AS (
       SELECT e1.u AS u, e2.v AS v
@@ -664,18 +656,7 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast against both endpoints, TakeOrdered for the top-k.
     The score is EXACT INTEGER milli-Jaccard (n*1000 DIV union) —
     no DECIMAL quantization needed at all, unlike AA's 1/ln terms."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= JLP_MINW)
-        .select("u", "v")
-    )
+    e = copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed(
         "u", "z")
     e1 = e.select(F.col("u"), F.col("v").alias("z"))

@@ -38,6 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ckpt import DISK as _DISK
+from ..functions.graphs import (
+    SQL_COPURCHASE_CTES,
+    copurchase_edges,
+    purchase_pairs,
+    sql_purchase_pairs,
+)
 from ..registry import query
 from ..tables import table
 from .dedup import (
@@ -405,7 +411,6 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KCORE_K = 3
 _KCORE_ROUNDS = 4
-_KCORE_MINW = 2
 
 
 def _kcore_oracle() -> str:
@@ -417,7 +422,7 @@ def _kcore_oracle() -> str:
     # materialized form runs in ~5 s.  (The Spark side has the same
     # barrier via localCheckpoint per round.)
     rounds = []
-    prev = "e0"
+    prev = "e"
     for r in range(1, _KCORE_ROUNDS + 1):
         rounds.append(f"""
     k{r} AS MATERIALIZED (
@@ -434,15 +439,7 @@ def _kcore_oracle() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_edges FROM e{r}"""
         for r in range(1, _KCORE_ROUNDS + 1))
     return f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e0 AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ),{",".join(rounds)}
+    WITH {SQL_COPURCHASE_CTES},{",".join(rounds)}
 {traj}
     """
 
@@ -450,12 +447,13 @@ def _kcore_oracle() -> str:
 @query("graph_kcore_peel", oracle=_kcore_oracle())
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling (k={_KCORE_K}) on the part co-purchase graph
-    (edge = two parts co-ordered >= {_KCORE_MINW} times, symmetric):
-    each round drops every vertex with degree < k and the edges it
-    carried, for {_KCORE_ROUNDS} bounded rounds — the dense-subgraph
-    extractor (community cores, spam-cluster mining) and the third
-    iterative-graph shape beside pagerank (value propagation) and
-    label_prop (label diffusion): here the STRUCTURE itself shrinks.
+    (functions/graphs.py: two parts co-ordered >= COPURCHASE_MIN_W
+    times, symmetric): each round drops every vertex with degree < k
+    and the edges it carried, for {_KCORE_ROUNDS} bounded rounds — the
+    dense-subgraph extractor (community cores, spam-cluster mining)
+    and the third iterative-graph shape beside pagerank (value
+    propagation) and label_prop (label diffusion): here the STRUCTURE
+    itself shrinks.
     Output is the (round, nodes, edges) trajectory, which also records
     how far from the fixpoint the bound stopped.
 
@@ -464,21 +462,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint) so the plan doesn't nest exponentially — the
     same move as graph_pagerank. Full degeneracy ordering would run
     rounds to fixpoint (O(peel depth)); the bounded form is what a
-    production job schedules. The w >= {_KCORE_MINW} support filter is
-    the same co-occurrence denoising as agg_market_basket's."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    production job schedules. The w >= COPURCHASE_MIN_W support
+    filter is the same co-occurrence denoising as agg_market_basket's."""
+    e = copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     traj = []
     for r in range(1, _KCORE_ROUNDS + 1):
         keep = (
@@ -514,15 +501,7 @@ _AA_TOPK = 20
 @query(
     "graph_adamic_adar",
     oracle=f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ), deg AS MATERIALIZED (
+    WITH {SQL_COPURCHASE_CTES}, deg AS MATERIALIZED (
       SELECT u AS z, COUNT(*) AS d FROM e GROUP BY u
     ), wedge AS (
       SELECT e1.u AS u, e2.v AS v, e1.v AS z
@@ -562,24 +541,13 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes existing edges, per-pair agg sums DECIMAL-quantized
     1/ln(deg) terms (shared z always has degree >= 2, so ln > 0),
     TakeOrdered for the top-k. Ordering ties break on (u, v)."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        # NOT checkpointed despite five consumers: the AQE-final plan
-        # already serves every consumer from ReusedExchange over the
-        # items self-join + weight agg (verified in
-        # plans/r14/graph_adamic_adar_before.txt), so a DISK
-        # materialization only adds a write+read — measured 2.3 -> 3.3 s
-        # at sf0.1 (paired A/B, both orders) and reverted.
-    )
+    # NOT checkpointed despite five consumers: the AQE-final plan
+    # already serves every consumer from ReusedExchange over the items
+    # self-join + weight agg (verified in
+    # plans/r14/graph_adamic_adar_before.txt), so a DISK
+    # materialization only adds a write+read — measured 2.3 -> 3.3 s
+    # at sf0.1 (paired A/B, both orders) and reverted.
+    e = copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").alias("d")).withColumnRenamed(
         "u", "z")
     e1 = e.select(F.col("u"), F.col("v").alias("z"))
@@ -607,15 +575,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_modularity",
     oracle=f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ), lab AS (
+    WITH {SQL_COPURCHASE_CTES}, lab AS (
       SELECT p_partkey AS p, p_brand AS c FROM part
     ), el AS MATERIALIZED (
       SELECT cu.c AS cu, cv.c AS cv
@@ -650,17 +610,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     both within-edge counts and degree sums; Q's per-community terms
     quantize through DECIMAL(18,12) before the final sum. Everything
     past the edge build is community-cardinality-sized."""
-    li = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-    )
+    e = copurchase_edges(spark, sf_dir)
     lab = p.select(F.col("p_partkey").alias("pk"), F.col("p_brand").alias("c"))
     el = (
         e.join(F.broadcast(lab.withColumnRenamed("pk", "u")
@@ -691,15 +642,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_clustering_coeff",
     oracle=f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ), deg AS MATERIALIZED (
+    WITH {SQL_COPURCHASE_CTES}, deg AS MATERIALIZED (
       SELECT u, COUNT(*) AS d FROM e GROUP BY u
     ), tri AS (
       -- closed wedges at the midpoint z: neighbors u < v that are
@@ -738,17 +681,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup join; per-node ratios quantize through DECIMAL before the
     averages. The symmetric edge list makes adjacency a direct
     equi-join, no direction cases."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    e = copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     e1 = e.select(F.col("v").alias("z"), F.col("u").alias("wu"))
     e2 = e.select(F.col("u").alias("z"), F.col("v").alias("wv"))
@@ -778,15 +712,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_assortativity",
     oracle=f"""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ), deg AS (
+    WITH {SQL_COPURCHASE_CTES}, deg AS (
       SELECT u, CAST(COUNT(*) AS DOUBLE) AS d FROM e GROUP BY u
     ), ed AS (
       SELECT du.d AS x, dv.d AS y
@@ -820,19 +746,10 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex-keyed hash joins), one co-moment aggregate with
     DECIMAL-quantized sums — the symmetric edge list makes the
     Newman edge-correlation exactly this Pearson."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok").filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW).select("u", "v")
-        # not checkpointed: consumers share the self-join exchange via
-        # ReusedExchange (see graph_adamic_adar note; checkpoint
-        # measured slower at sf0.1 and reverted)
-    )
+    # not checkpointed: consumers share the self-join exchange via
+    # ReusedExchange (see graph_adamic_adar note; checkpoint measured
+    # slower at sf0.1 and reverted)
+    e = copurchase_edges(spark, sf_dir)
     deg = e.groupBy("u").agg(F.count("*").cast("double").alias("d"))
     ed = (
         e.join(deg.withColumnRenamed("u", "ju")
@@ -866,8 +783,7 @@ _CF_TOP = 20
     "ml_item_cf",
     oracle=f"""
     WITH cs AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+      {sql_purchase_pairs()}
     ), deg AS MATERIALIZED (
       SELECT supp, COUNT(*) AS n FROM cs GROUP BY supp
     ), cooc AS MATERIALIZED (
@@ -908,18 +824,10 @@ def ml_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a user with 10^5 items contributes nothing to item similarity
     but 10^10 pairs — the dedup_ngram_capped df-cap argument,
     user-side); degrees broadcast back as an item-bounded dim."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    cs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-        # not checkpointed: the degree dim and both self-join sides
-        # share the distinct's exchange via ReusedExchange (see
-        # graph_adamic_adar note; checkpoint measured slower at sf0.1
-        # and reverted)
-    )
+    # not checkpointed: the degree dim and both self-join sides share
+    # the distinct's exchange via ReusedExchange (see graph_adamic_adar
+    # note; checkpoint measured slower at sf0.1 and reverted)
+    cs = purchase_pairs(spark, sf_dir)
     deg = cs.groupBy("supp").agg(F.count("*").alias("n"))
     a, b = cs.alias("a"), cs.alias("b")
     cooc = (
@@ -972,15 +880,7 @@ def _bfs_oracle() -> str:
         f"    SELECT {r} AS dist, CAST(COUNT(*) AS BIGINT) AS n_nodes FROM d{r}"
         for r in range(0, _BFS_ROUNDS + 1))
     return f"""
-    WITH items AS MATERIALIZED (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS p FROM lineitem
-    ), e AS MATERIALIZED (
-      SELECT u, v FROM (
-        SELECT a.p AS u, b.p AS v, COUNT(*) AS w
-        FROM items a JOIN items b ON b.ok = a.ok AND a.p <> b.p
-        GROUP BY 1, 2)
-      WHERE w >= {_KCORE_MINW}
-    ), verts AS MATERIALIZED (
+    WITH {SQL_COPURCHASE_CTES}, verts AS MATERIALIZED (
       SELECT DISTINCT u FROM e
     ), d0 AS MATERIALIZED (
       SELECT u FROM verts WHERE u % {_BFS_SEED_MOD} = 0
@@ -1014,19 +914,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor storage stay flat in iteration count.  The bounded round
     count is the production posture (distance saturates at the
     diameter of interest); the histogram output is schema-bounded."""
-    li = table(spark, sf_dir, "lineitem")
-    items = li.select(F.col("l_orderkey").alias("ok"),
-                      F.col("l_partkey").alias("p")).distinct()
-    a = items.select("ok", F.col("p").alias("u"))
-    b = items.select("ok", F.col("p").alias("v"))
-    e = (
-        a.join(b, "ok")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v").agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= _KCORE_MINW)
-        .select("u", "v")
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
+    e = copurchase_edges(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     verts = e.select("u").distinct()
     # LAZY round checkpoints (r15): the round count is FIXED — no
     # driver decision reads a round's result — so materialization can

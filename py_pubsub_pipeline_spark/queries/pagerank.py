@@ -51,56 +51,111 @@ Mirrors the reference's driver-coordinates/executors-compute loop
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.ckpt import DISK as _DISK
+from ..functions.graphs import (
+    SQL_PURCHASE_CTES,
+    SQL_PURCHASE_VERTICES,
+    purchase_edges,
+    purchase_pairs,
+    purchase_vertices,
+    sql_purchase_pairs,
+)
 from ..registry import query
-from ..tables import table
 
 N_ITER = 6
 DAMPING = 0.85
 TELEPORT = 0.15
-SUPP_OFFSET = 10_000_000  # supplier ids live above customer ids
+
+# Shared by the PageRank and PPR oracles: purchase edges, out-degrees
+# and the vertex set.
+_SQL_PR_PREFIX = f"""{SQL_PURCHASE_CTES},
+    deg AS MATERIALIZED (SELECT u, CAST(COUNT(*) AS DOUBLE) AS outdeg
+            FROM edges GROUP BY u),
+    verts AS (
+      {SQL_PURCHASE_VERTICES})"""
+
+
+def _sql_damped_rounds(r: str, base: str, n: int, teleport: str,
+                       keep: str = "") -> str:
+    """CTEs {r}1..{r}n, one damped round each over {r}0 (the oracle
+    twin of `_damped_round`): `base` supplies the vertices plus any
+    `keep` columns, `teleport` is the round's teleport term."""
+    return ",".join(f"""
+    {r}{i} AS MATERIALIZED (
+      SELECT vt.node,{keep}
+             {teleport} + {DAMPING}
+               * (COALESCE(CAST(s.s AS DOUBLE), 0.0) / 1000000000000.0)
+               AS pr
+      FROM {base} vt LEFT JOIN (
+        SELECT e.v AS node,
+               SUM(CAST(FLOOR((r.pr / d.outdeg) * 1000000000000.0 + 0.5)
+                        AS DECIMAL(28,0))) AS s
+        FROM {r}{i - 1} r
+        JOIN edges e ON e.u = r.node
+        JOIN deg d ON d.u = r.node
+        GROUP BY e.v) s ON s.node = vt.node)""" for i in range(1, n + 1))
 
 
 def _oracle_sql() -> str:
     """Unrolled N_ITER-iteration PageRank as chained CTEs (no
     recursive CTE: DuckDB restricts aggregates in recursive terms;
     unrolling keeps the oracle a plain, obviously-correct query)."""
-    iters = []
-    for i in range(1, N_ITER + 1):
-        iters.append(f"""
-    r{i} AS MATERIALIZED (
-      SELECT vt.node,
-             {TELEPORT} + {DAMPING}
-               * (COALESCE(CAST(s.s AS DOUBLE), 0.0) / 1000000000000.0) AS pr
-      FROM verts vt LEFT JOIN (
-        SELECT e.v AS node,
-               SUM(CAST(FLOOR((r.pr / d.outdeg) * 1000000000000.0 + 0.5)
-                        AS DECIMAL(28,0))) AS s
-        FROM r{i - 1} r
-        JOIN edges e ON e.u = r.node
-        JOIN deg d ON d.u = r.node
-        GROUP BY e.v) s ON s.node = vt.node)""")
     return f"""
-    WITH eb AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS MATERIALIZED (
-      SELECT cust AS u, supp + {SUPP_OFFSET} AS v FROM eb
-      UNION ALL
-      SELECT supp + {SUPP_OFFSET} AS u, cust AS v FROM eb),
-    deg AS MATERIALIZED (SELECT u, CAST(COUNT(*) AS DOUBLE) AS outdeg
-            FROM edges GROUP BY u),
-    verts AS (
-      SELECT c_custkey AS node FROM customer
-      UNION
-      SELECT s_suppkey + {SUPP_OFFSET} AS node FROM supplier),
+    WITH {_SQL_PR_PREFIX},
     r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS pr FROM verts),
-    {','.join(iters)}
+    {_sql_damped_rounds("r", "verts", N_ITER, f"{TELEPORT}")}
     SELECT node, pr FROM r{N_ITER}
     """
+
+
+def _edges_with_outdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(u, v, outdeg): the purchase edge list with each source's
+    out-degree attached, checkpointed once for every round to join.
+    No repartition("u") before the checkpoint: the checkpoint erases
+    partitioning metadata (module header), so that exchange was dead
+    weight — the deg join's output layout is kept as-is."""
+    edges = purchase_edges(spark, sf_dir)
+    deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
+    return edges.join(deg, "u").localCheckpoint(eager=True, storageLevel=_DISK)
+
+
+def _damped_round(ed: DataFrame, base: DataFrame, ranks: DataFrame,
+                  keep: list[str], teleport: Column) -> DataFrame:
+    """One damped round: every `base` vertex gets `teleport` plus
+    DAMPING times its snapped in-edge rank sum; `keep` columns of
+    `base` ride along.  Shared by graph_pagerank (teleport 0.15) and
+    graph_ppr_seeds (teleport 0.15 * s0)."""
+    sums = (
+        ed.join(ranks, ed.u == ranks.node)
+        .select(
+            F.col("v"),
+            F.floor(
+                (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
+            )
+            .cast("decimal(28,0)")
+            .alias("c"),
+        )
+        .groupBy("v")
+        .agg(F.sum("c").alias("s"))
+    )
+    return (
+        base.join(sums, base.node == sums.v, "left")
+        .select(
+            "node", *keep,
+            (
+                teleport
+                + F.lit(DAMPING)
+                * (
+                    F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+                    / F.lit(1e12)
+                )
+            ).alias("pr"),
+        )
+        .localCheckpoint(eager=True, storageLevel=_DISK)
+    )
 
 
 N_LPA_ITER = 4
@@ -128,17 +183,9 @@ def _lpa_oracle() -> str:
                                   ORDER BY c DESC, lbl) AS rn
         FROM cnt{i}) WHERE rn = 1)""")
     return f"""
-    WITH eb AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS MATERIALIZED (
-      SELECT cust AS u, supp + {SUPP_OFFSET} AS v FROM eb
-      UNION ALL
-      SELECT supp + {SUPP_OFFSET} AS u, cust AS v FROM eb),
+    WITH {SQL_PURCHASE_CTES},
     verts AS (
-      SELECT c_custkey AS node FROM customer
-      UNION
-      SELECT s_suppkey + {SUPP_OFFSET} AS node FROM supplier),
+      {SQL_PURCHASE_VERTICES}),
     l0 AS (SELECT node, node AS lbl FROM verts),
     {','.join(iters)}
     SELECT node, lbl AS community FROM l{N_LPA_ITER}
@@ -165,40 +212,16 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank — without it the plan doubles per round).
     Determinism: the vote multiset and tie-break are engine-
     independent, so the oracle replays the exact label sequence."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
     # LAZY checkpoints throughout (r15): LPA's round count is FIXED —
     # no driver decision reads a round's result — so materialization
     # folds into the final action instead of one job barrier per round
     # (lineage truncation is plan-level and identical either way).
     # Force-lazy interleaved A/B at sf0.1: every lazy run beat every
     # eager run (5.13-5.33 s vs 5.94-6.47), identical rows.
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    ).localCheckpoint(eager=False, storageLevel=_DISK)
-    verts = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    edges = purchase_edges(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
+    verts = purchase_vertices(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     lbl = verts.select("node", F.col("node").alias("lbl"))
     # Top-1 stays a row_number window: the max(struct(c, -lbl)) hash-
     # agg form was tried (r14 optimization round) and measured a small
@@ -233,73 +256,12 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier', via orders⋈lineitem). Returns (node, pr) for every
     customer and supplier; supplier ids are offset by 10M into a
     disjoint id space."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    )
-    deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
-    # Edge list with out-degree attached, laid out by source key once;
-    # every iteration's join reuses this partitioning (only ranks move).
-    # no repartition("u") before the checkpoint: the checkpoint
-    # erases partitioning metadata (module header), so the exchange
-    # was dead weight — the deg join's output layout is kept as-is
-    ed = (
-        edges.join(deg, "u")
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
-    verts = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
+    ed = _edges_with_outdeg(spark, sf_dir)
+    verts = purchase_vertices(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     ranks = verts.select("node", F.lit(1.0).cast("double").alias("pr"))
     for _ in range(N_ITER):
-        sums = (
-            ed.join(ranks, ed.u == ranks.node)
-            .select(
-                F.col("v"),
-                F.floor(
-                    (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
-                )
-                .cast("decimal(28,0)")
-                .alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            verts.join(sums, verts.node == sums.v, "left")
-            .select(
-                "node",
-                (
-                    F.lit(TELEPORT)
-                    + F.lit(DAMPING)
-                    * (
-                        F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                        / F.lit(1e12)
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
-        )
+        ranks = _damped_round(ed, verts, ranks, [], F.lit(TELEPORT))
     return ranks
 
 
@@ -337,8 +299,7 @@ def _hits_oracle() -> str:
       FROM hr{i})""")
     return f"""
     WITH eb AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      {sql_purchase_pairs()}),
     h0 AS (SELECT DISTINCT cust AS node, CAST(1.0 AS DOUBLE) AS sc
            FROM eb),
     {','.join(iters)}
@@ -369,11 +330,10 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round's vectors are bit-identical across engines.
 
     Scale: per round, two join+agg passes over the edge list — the
-    same two-shuffle profile as PageRank; the edge list repartitions
-    on its join key once and localCheckpoint truncates lineage per
-    round. Scores move as (id, double) pairs, never adjacency."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
+    same two-shuffle profile as PageRank; the edge list is
+    checkpointed once (not repartitioned: see the module header) and
+    localCheckpoint truncates lineage per round. Scores move as
+    (id, double) pairs, never adjacency."""
     # LAZY checkpoints throughout (r15): HITS runs a FIXED round count
     # — no driver decision reads a round's result — so materialization
     # folds into the final action instead of one job barrier per
@@ -384,13 +344,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged: ar/hr feed both a projection and the broadcast-MAX
     # subquery, so they stay checkpointed (one materialization serves
     # both); laziness only moves WHEN the blocks land.
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-        .localCheckpoint(eager=False, storageLevel=_DISK)
-    )
+    eb = purchase_pairs(spark, sf_dir).localCheckpoint(
+        eager=False, storageLevel=_DISK)
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
     h = eb.select("cust").distinct().select(
         F.col("cust").alias("node"), F.lit(1.0).alias("sc")
@@ -460,13 +415,7 @@ def _katz_oracle() -> str:
         for i in range(1, N_KATZ_ITER + 1)
     )
     return f"""
-    WITH eb AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS MATERIALIZED (
-      SELECT cust AS u, supp + {SUPP_OFFSET} AS v FROM eb
-      UNION ALL
-      SELECT supp + {SUPP_OFFSET} AS u, cust AS v FROM eb),
+    WITH {SQL_PURCHASE_CTES},
     verts AS MATERIALIZED (
       SELECT DISTINCT u AS node FROM edges),
     k0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS sc FROM verts),
@@ -495,22 +444,11 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final sum of {N_KATZ_ITER} doubles is a fixed-order chain.
 
     Scale: per step one edge join + one destination-keyed agg on the
-    repartitioned/localCheckpointed edge list — the PageRank
-    two-shuffle profile; walk terms move as (id, double) pairs."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"), (F.col("supp") + SUPP_OFFSET).alias("v")
-    ).unionByName(
-        eb.select((F.col("supp") + SUPP_OFFSET).alias("u"),
-                  F.col("cust").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    localCheckpointed (not repartitioned: see the module header) edge
+    list — the PageRank two-shuffle profile; walk terms move as
+    (id, double) pairs."""
+    edges = purchase_edges(spark, sf_dir).localCheckpoint(
+        eager=True, storageLevel=_DISK)
     verts = edges.select(F.col("u").alias("node")).distinct() \
         .localCheckpoint(eager=True, storageLevel=_DISK)
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
@@ -548,36 +486,8 @@ def _ppr_oracle() -> str:
     discipline with the teleport mass concentrated on the seed set
     (r_i = 0.15 * seed + 0.85 * snapped-incoming) and rank mass
     starting ON the seeds."""
-    iters = []
-    for i in range(1, PPR_ITER + 1):
-        iters.append(f"""
-    p{i} AS MATERIALIZED (
-      SELECT vt.node, vt.s0,
-             {TELEPORT} * vt.s0 + {DAMPING}
-               * (COALESCE(CAST(s.s AS DOUBLE), 0.0) / 1000000000000.0)
-               AS pr
-      FROM sv vt LEFT JOIN (
-        SELECT e.v AS node,
-               SUM(CAST(FLOOR((r.pr / d.outdeg) * 1000000000000.0 + 0.5)
-                        AS DECIMAL(28,0))) AS s
-        FROM p{i - 1} r
-        JOIN edges e ON e.u = r.node
-        JOIN deg d ON d.u = r.node
-        GROUP BY e.v) s ON s.node = vt.node)""")
     return f"""
-    WITH eb AS MATERIALIZED (
-      SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
-      FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    edges AS MATERIALIZED (
-      SELECT cust AS u, supp + {SUPP_OFFSET} AS v FROM eb
-      UNION ALL
-      SELECT supp + {SUPP_OFFSET} AS u, cust AS v FROM eb),
-    deg AS MATERIALIZED (SELECT u, CAST(COUNT(*) AS DOUBLE) AS outdeg
-            FROM edges GROUP BY u),
-    verts AS (
-      SELECT c_custkey AS node FROM customer
-      UNION
-      SELECT s_suppkey + {SUPP_OFFSET} AS node FROM supplier),
+    WITH {_SQL_PR_PREFIX},
     sv AS MATERIALIZED (
       SELECT node,
              CASE WHEN node % {PPR_SEED_MOD} = 0
@@ -585,7 +495,8 @@ def _ppr_oracle() -> str:
                AS s0
       FROM verts),
     p0 AS (SELECT node, s0, s0 AS pr FROM sv),
-    {','.join(iters)}
+    {_sql_damped_rounds("p", "sv", PPR_ITER, f"{TELEPORT} * vt.s0",
+                        keep=" vt.s0,")}
     SELECT node, CAST(s0 AS BIGINT) AS is_seed, pr FROM p{PPR_ITER}
     """
 
@@ -606,44 +517,15 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     damping update is plain double ops), so every iteration's rank
     vector is bit-identical across engines.  Scale: per round one
     edges-by-source join plus one destination hash agg — only the
-    vertex-cardinality rank table moves; the edge list lays out by
-    source once and every round reuses it; rounds checkpoint
-    DISK_ONLY (the round-7 lesson).  PPR sparsity: mass stays
-    concentrated near seeds, so the rank table a real run carries can
-    additionally be thresholded — documented, not applied, since the
-    oracle replays the dense form."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    eb = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("cust"),
-                F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    edges = eb.select(
-        F.col("cust").alias("u"),
-        (F.col("supp") + SUPP_OFFSET).alias("v"),
-    ).unionByName(
-        eb.select(
-            (F.col("supp") + SUPP_OFFSET).alias("u"),
-            F.col("cust").alias("v"),
-        )
-    )
-    deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
-    # no repartition("u"): dead shuffle, see the module header
-    ed = (
-        edges.join(deg, "u")
-        .localCheckpoint(eager=True, storageLevel=_DISK)
-    )
+    vertex-cardinality rank table moves; the edge list is
+    checkpointed once (not repartitioned: see the module header) and
+    every round reuses it; rounds checkpoint DISK_ONLY (the round-7
+    lesson).  PPR sparsity: mass stays concentrated near seeds, so the
+    rank table a real run carries can additionally be thresholded —
+    documented, not applied, since the oracle replays the dense form."""
+    ed = _edges_with_outdeg(spark, sf_dir)
     sv = (
-        table(spark, sf_dir, "customer")
-        .select(F.col("c_custkey").alias("node"))
-        .unionByName(
-            table(spark, sf_dir, "supplier").select(
-                (F.col("s_suppkey") + SUPP_OFFSET).alias("node")
-            )
-        )
-        .distinct()
+        purchase_vertices(spark, sf_dir)
         .select(
             "node",
             F.when(F.col("node") % PPR_SEED_MOD == 0, F.lit(1.0))
@@ -653,34 +535,8 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = sv.select("node", "s0", F.col("s0").alias("pr"))
     for _ in range(PPR_ITER):
-        sums = (
-            ed.join(ranks, ed.u == ranks.node)
-            .select(
-                F.col("v"),
-                F.floor(
-                    (F.col("pr") / F.col("outdeg")) * F.lit(1e12) + F.lit(0.5)
-                )
-                .cast("decimal(28,0)")
-                .alias("c"),
-            )
-            .groupBy("v")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = (
-            sv.join(sums, sv.node == sums.v, "left")
-            .select(
-                "node", "s0",
-                (
-                    F.lit(TELEPORT) * F.col("s0")
-                    + F.lit(DAMPING)
-                    * (
-                        F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                        / F.lit(1e12)
-                    )
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
-        )
+        ranks = _damped_round(ed, sv, ranks, ["s0"],
+                              F.lit(TELEPORT) * F.col("s0"))
     return ranks.select(
         "node", F.col("s0").cast("long").alias("is_seed"), "pr"
     )

@@ -10,6 +10,7 @@ import math
 
 from pyspark.sql import functions as F
 
+from py_pubsub_pipeline_spark.functions.graphs import COPURCHASE_MIN_W
 from py_pubsub_pipeline_spark.queries import governance as gov
 from py_pubsub_pipeline_spark.registry import load_all
 from py_pubsub_pipeline_spark.tables import table
@@ -220,7 +221,7 @@ def test_jaccard_linkpred_matches_bruteforce(spark):
                     wcount[(u, v)] = wcount.get((u, v), 0) + 1
     adj: dict[int, set] = {}
     for (u, v), w in wcount.items():
-        if w >= gov.JLP_MINW:
+        if w >= COPURCHASE_MIN_W:
             adj.setdefault(u, set()).add(v)
     scored = []
     seen = set()

@@ -230,25 +230,6 @@ def test_pack_sequences_single_exchange(spark):
     assert "BatchEvalPython" not in final
 
 
-def test_share_shingles_serves_consumers_from_cache(spark):
-    # Cross-query shingle sharing: inside the context both near-dup
-    # passes read the persisted (doc_id, h) relation (cache scan in
-    # the plan) and return byte-identical results; outside it the
-    # plan is the uncached exchange form again.
-    from py_pubsub_pipeline_spark.queries import dedup
-
-    key = "dedup_ngram_jaccard"
-    base = sorted(map(tuple, REG[key].fn(spark, SF_SMALL).collect()))
-    with dedup.share_shingles(spark, SF_SMALL):
-        df = REG[key].fn(spark, SF_SMALL)
-        assert sorted(map(tuple, df.collect())) == base
-        plan = _executed(df, spark)
-        assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-    plan2 = _executed(REG[key].fn(spark, SF_SMALL), spark)
-    assert "InMemoryTableScan" not in plan2
-    assert "TableCacheQueryStage" not in plan2
-
-
 def test_sample_balanced_exact_shards_within_language(spark):
     # The exact-quota sampler must NOT serialize a language onto one
     # task: its rank window partitions on (lang, shard) — the md5-

@@ -335,7 +335,7 @@ def test_formats_fixture_schemas_match_inferred(spark):
         "scan_partition_pruned", "scan_partition_overwrite",
         "scan_manifest_snapshot", "join_dpp_partition_pruned",
         "scan_partition_evolution", "scan_equality_deletes",
-        "scan_minmax_skipping",
+        "scan_minmax_skipping", "scan_time_travel",
     ):
         reg.get(key).fn(spark, SF_SMALL).count()
 
@@ -346,6 +346,7 @@ def test_formats_fixture_schemas_match_inferred(spark):
         raise AssertionError(f"no {prefix}* under {base}")
 
     by_status = FM._cache_dir(SF_SMALL, "orders_by_status")
+    manifests = FM._manifest_fixture(spark, SF_SMALL)
     by_both = FM._cache_dir(SF_SMALL, "orders_by_status_priority")
     spec2_status = leaf(by_both, "o_orderstatus=")
     checks = [
@@ -363,6 +364,15 @@ def test_formats_fixture_schemas_match_inferred(spark):
          FM._DELETE_KEYS_DDL),
         ("range file", os.path.join(
             FM._cache_dir(SF_SMALL, "range_files"), "range-0"),
+         FM._ORDERS_DDL),
+        # scan_time_travel: the file only snapshot 2 commits
+        ("time-travel file", os.path.join(manifests, "file-2"),
+         FM._ORDERS_DDL),
+        # _zone_stats: a hash-layout file beside the range files
+        ("zone-stats hash file", os.path.join(manifests, "file-1"),
+         FM._ORDERS_DDL),
+        # _file_stats: snapshot 3's compaction output
+        ("file-stats compacted file", os.path.join(manifests, "file-3"),
          FM._ORDERS_DDL),
         ("spec-1 leaf", leaf(by_status, "o_orderstatus="),
          FM._ORDERS_LEAF_SPEC1_DDL),

@@ -312,6 +312,7 @@ def _vecs(spark, sf=SF_MED):
 
 def test_bfs_hops_matches_python_bfs(spark):
     # Recompute the multi-source BFS from the same co-purchase edges.
+    from py_pubsub_pipeline_spark.functions.graphs import COPURCHASE_MIN_W
     from py_pubsub_pipeline_spark.queries import graph as g
 
     li = (
@@ -326,7 +327,7 @@ def test_bfs_hops_matches_python_bfs(spark):
         .filter("u <> v")
         .groupBy("u", "v")
         .count()
-        .filter(f"count >= {g._KCORE_MINW}")
+        .filter(f"count >= {COPURCHASE_MIN_W}")
         .select("u", "v")
         .collect()
     )
@@ -625,6 +626,7 @@ def test_ppr_seeds_matches_python_reference(spark):
     # integer sums, identical double ops) from the same edge list.
     import math
 
+    from py_pubsub_pipeline_spark.functions.graphs import SUPP_OFFSET
     from py_pubsub_pipeline_spark.queries import pagerank as pg
 
     o = table(spark, SF_MED, "orders").selectExpr(
@@ -637,7 +639,7 @@ def test_ppr_seeds_matches_python_reference(spark):
     edges: dict[int, list] = {}
     verts = set()
     for r in eb:
-        u, v = r["cust"], r["supp"] + pg.SUPP_OFFSET
+        u, v = r["cust"], r["supp"] + SUPP_OFFSET
         edges.setdefault(u, []).append(v)
         edges.setdefault(v, []).append(u)
     verts = {
@@ -645,7 +647,7 @@ def test_ppr_seeds_matches_python_reference(spark):
         for r in table(spark, SF_MED, "customer").select("c_custkey")
         .collect()
     } | {
-        r["s_suppkey"] + pg.SUPP_OFFSET
+        r["s_suppkey"] + SUPP_OFFSET
         for r in table(spark, SF_MED, "supplier").select("s_suppkey")
         .collect()
     }

@@ -597,6 +597,23 @@ def test_mor_commit_log_records_delete_bytes_and_fields(spark, tmp_path):
         _json.dump({k: full[k] for k in ("seq", "data", "deletes")}, fh)
     assert {tuple(r) for r in sink.read_snapshot(spark).collect()} == want
 
+    # the same commits written with their columns in another order
+    # resolve by name to the same rows — reordering is not drift
+    reordered = MorUpsertSink(str(tmp_path / "mor_reordered"), key="k",
+                              order=["ver"])
+    for seq, pred in enumerate(["k % 2 = 0", "k % 3 = 0"]):
+        cols = ["k", "ver", "val"] if seq == 0 else ["val", "k", "ver"]
+        reordered(
+            o.where(pred).select(
+                "k", F.lit(seq).cast("long").alias("ver"),
+                (F.col("k") * 10 + seq).cast("long").alias("val"),
+            ).select(*cols),
+            seq,
+        )
+    assert reordered._commits()[1]["fields"] == ["val", "k", "ver"]
+    assert {tuple(r) for r in reordered.read_snapshot(spark).collect()} \
+        == want
+
     # name-level drift (a commit whose recorded columns differ from
     # the resolved schema) raises at plan-build time, before any scan
     drifted = dict(full)
