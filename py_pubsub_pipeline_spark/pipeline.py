@@ -614,28 +614,43 @@ class PipelineMetricsListener:
 
 
 class GracefulKiller:
-    """SIGINT/SIGTERM -> stop the streaming query at the next safe
-    point (mirrors P:15-24; pre-emptible-VM-friendly per P:86-88)."""
+    """SIGINT/SIGTERM -> stop the streaming queries at the next safe
+    point (mirrors P:15-24; pre-emptible-VM-friendly per P:86-88).
+
+    Signal handlers belong to the process, so there is one killer per
+    process (`KILLER`): every pipeline's queries register with it and a
+    signal stops them all. The handlers are installed by the first
+    `watch()`, not at import."""
 
     def __init__(self) -> None:
         self.kill_now = False
         self._queries: list[Any] = []
-        try:
-            signal.signal(signal.SIGINT, self._exit)
-            signal.signal(signal.SIGTERM, self._exit)
-        except ValueError:
-            pass  # not on the main thread (tests) — flag-only mode
+        self._installed = False
 
     def watch(self, query: Any) -> None:
         self._queries.append(query)
+        if not self._installed:
+            try:
+                signal.signal(signal.SIGINT, self._exit)
+                signal.signal(signal.SIGTERM, self._exit)
+                self._installed = True
+            except ValueError:
+                pass  # not on the main thread (tests) — flag-only mode
+
+    def unwatch(self, query: Any) -> None:
+        if query in self._queries:
+            self._queries.remove(query)
 
     def _exit(self, signum, frame) -> None:  # noqa: ANN001
         self.kill_now = True
-        for q in self._queries:
+        for q in list(self._queries):
             try:
                 q.stop()
             except Exception:  # noqa: BLE001
                 log.exception("stop failed")
+
+
+KILLER = GracefulKiller()
 
 
 # ------------------------------------------------------------- pipeline
@@ -672,7 +687,7 @@ class SparkPipeline:
     # a DLQ is table stakes — SURVEY §1.2's _corrupt_record policy.)
     # None (default) keeps reference-parity fail-the-batch semantics.
     dead_letter_dir: str | None = None
-    killer: GracefulKiller = field(default_factory=GracefulKiller)
+    killer: GracefulKiller = KILLER
     # R13: per-batch metrics (rows in/out, stage durations, commit
     # status) — populated by the listener process() attaches.
     metrics: PipelineMetricsListener = field(
@@ -746,12 +761,7 @@ class SparkPipeline:
 
         return df.mapInPandas(run_batches, "value binary, error string")
 
-    def process(
-        self,
-        *,
-        available_now: bool = True,
-        timeout: float | None = 120.0,
-    ) -> Any:
+    def process(self, *, available_now: bool = True) -> Any:
         """Run the pipeline. available_now=True drains everything
         currently available and stops — across as many micro-batches as
         bulk_limit requires (the bounded-run replacement for P:132-166's
@@ -819,6 +829,7 @@ class SparkPipeline:
                     raise ex
             finally:
                 query.stop()
+                self.killer.unwatch(query)
                 # Listener events are delivered async; for the bounded
                 # run give the terminated event a moment to land so
                 # callers can read metrics immediately after process().

@@ -5,6 +5,22 @@ ones we'd ship on a 1000-executor cluster: AQE on (runtime re-plan,
 skew-join splitting, partition coalescing), Arrow on (vectorized
 Python interop), UTC session timezone (parity with the DuckDB oracle
 and with naive parquet timestamps).
+
+Python workers start from `worker_daemon`, not from Spark's own
+daemon. Spark puts `pyspark.zip`, the py4j zip and the `spark-core`
+jar on every worker's `sys.path`, and each Python task calls
+`importlib.invalidate_caches()`, which on CPython 3.11 makes every
+cached `zipimporter` re-read its archive's central directory: about
+160 ms per task, against under 1 ms of UDF work on a small
+micro-batch. The daemon drops the archives whose packages already
+import from a directory at the same version, so pyspark and py4j
+import from site-packages and a task re-reads nothing. It reaches every
+Python-worker task of a `get_spark` session: the pipeline's
+`mapInPandas`, the `applyInPandas`/`mapInPandas` query kernels, UDFs.
+
+The package ships to workers as a zip named by a hash of its sources
+(`ensure_package_on_workers`), so a session never ships another
+tree's code and repeated runs of one tree share one file.
 """
 
 from __future__ import annotations
@@ -56,6 +72,47 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _package_zip() -> str:
+    """Zip of this package's sources in the temporary directory, named
+    by their hash: a process finds a zip only where a tree with the
+    same sources wrote it, and repeated runs of one tree share it."""
+    import hashlib
+    import tempfile
+    import zipfile
+
+    import py_pubsub_pipeline_spark as pkg
+
+    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    root = os.path.dirname(pkg_dir)
+    sources = sorted(
+        os.path.relpath(os.path.join(dirpath, fn), root)
+        for dirpath, _, files in os.walk(pkg_dir)
+        for fn in files
+        if fn.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for rel in sources:
+        with open(os.path.join(root, rel), "rb") as fh:
+            digest.update(rel.encode() + b"\0" + fh.read() + b"\0")
+    zpath = os.path.join(
+        tempfile.gettempdir(),
+        f"py_pubsub_pipeline_spark_{digest.hexdigest()[:16]}.zip",
+    )
+    if not os.path.exists(zpath):
+        # Write aside and rename, so a concurrent session never ships
+        # a half-written zip.
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=os.path.dirname(zpath))
+        try:
+            with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+                for rel in sources:
+                    z.write(os.path.join(root, rel), rel)
+            os.replace(tmp, zpath)
+        except BaseException:
+            os.remove(tmp)
+            raise
+    return zpath
+
+
 def ensure_package_on_workers(spark: SparkSession) -> None:
     """Ship this package to executor Python workers.
 
@@ -67,24 +124,7 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     session and addPyFile it."""
     if spark.conf.get("spark.py_pubsub_pipeline.pkg_shipped", None) == "true":
         return
-    import tempfile
-    import zipfile
-
-    import py_pubsub_pipeline_spark as pkg
-
-    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"py_pubsub_pipeline_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for dirpath, _, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(dirpath, fn)
-                        z.write(full, os.path.relpath(full, root))
-    spark.sparkContext.addPyFile(zpath)
+    spark.sparkContext.addPyFile(_package_zip())
     spark.conf.set("spark.py_pubsub_pipeline.pkg_shipped", "true")
 
 
@@ -115,6 +155,7 @@ def get_spark(app_name: str = "py_pubsub_pipeline_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "py_pubsub_pipeline_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)

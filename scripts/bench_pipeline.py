@@ -112,7 +112,7 @@ def run_spark(spark, in_dir: str, base: str, *, column: bool) -> float:
         checkpoint_dir=ckpt,
     )
     t0 = time.time()
-    pipe.process(available_now=True, timeout=600.0)
+    pipe.process(available_now=True)
     dt = time.time() - t0
     n = sum(1 for f in os.listdir(out) if f.endswith(".txt")
             for _ in open(os.path.join(out, f)))

@@ -291,3 +291,33 @@ def test_column_processor_fast_path(spark, tmp_path):
     ).process()
     out = sorted((json.loads(bytes(r)) for r in sink.rows), key=lambda d: d["i"])
     assert [d["data_up"] for d in out] == ["SOMEDATA"] * 3
+
+
+def test_sigterm_stops_every_pipelines_queries(tmp_path):
+    """Signal handlers are per process (P:15-24): with two pipelines
+    in one process, SIGTERM stops the queries of both, not only those
+    of the pipeline built last."""
+    import signal
+
+    class FakeQuery:
+        stopped = False
+
+        def stop(self) -> None:
+            self.stopped = True
+
+    def pipeline(name: str) -> SparkPipeline:
+        return SparkPipeline(
+            spark=None, source=FileStreamSource(str(tmp_path / name)), sink=CollectingSink()
+        )
+
+    first, second = pipeline("a"), pipeline("b")
+    q1, q2 = FakeQuery(), FakeQuery()
+    first.killer.watch(q1)
+    second.killer.watch(q2)
+    handler = signal.getsignal(signal.SIGTERM)
+    try:
+        handler(signal.SIGTERM, None)
+        assert q1.stopped and q2.stopped
+    finally:
+        first.killer.unwatch(q1)
+        second.killer.unwatch(q2)

@@ -52,7 +52,7 @@ def test_bulk_limit_caps_batches(spark, tmp_path):
         processor=lambda batch: [{"i": m["i"], "bsz": len(batch)} for m in batch],
         bulk=True,
         checkpoint_dir=str(tmp_path / "ckpt"),
-    ).process(timeout=240)
+    ).process()
     out = [json.loads(bytes(r)) for r in sink.rows]
     assert sorted(d["i"] for d in out) == [0, 1, 2, 3, 4]
     assert all(d["bsz"] <= 2 for d in out)
