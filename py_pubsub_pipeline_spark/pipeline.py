@@ -27,6 +27,14 @@ Streaming:
                             count-based equality bugs avoided: P:161-164
                             never terminates if a batch overshoots)
 
+When the batch is cached: only with a dead-letter queue. The DLQ path
+runs two actions on each micro-batch (the quarantine write, then the
+sink), so it persists the batch and the processor runs once per
+message. Without one, a failing message fails the batch, nothing is
+left to filter, and the batch goes to the sink uncached: a one-action
+sink (collect, one write) runs the processor once, and a sink that runs
+more actions caches the batch itself, as `MorUpsertSink` does.
+
 Divergence from the reference, by design: the bulk variant's
 positional zip (P:232) silently truncates on length mismatch; here a
 bulk processor returning the wrong number of results raises.
@@ -249,10 +257,16 @@ class MorUpsertSink:
         )
         data_rel = f"data-{epoch_id}"
         del_rel = f"delete-{epoch_id}"
-        compacted.write.mode("overwrite").parquet(
-            os.path.join(self.path, data_rel))
-        compacted.select(self.key).write.mode("overwrite").parquet(
-            os.path.join(self.path, del_rel))
+        # Two writes of one batch: cache it so the second does not
+        # re-run the pipeline's processor (foreachBatch rule).
+        compacted.persist()
+        try:
+            compacted.write.mode("overwrite").parquet(
+                os.path.join(self.path, data_rel))
+            compacted.select(self.key).write.mode("overwrite").parquet(
+                os.path.join(self.path, del_rel))
+        finally:
+            compacted.unpersist()
         os.makedirs(self._commit_dir(), exist_ok=True)
         entry = os.path.join(self._commit_dir(), f"{epoch_id}.json")
         tmp = entry + ".tmp"
@@ -668,6 +682,12 @@ class SparkPipeline:
     column_processor: the Spark-first fast path — a function
         DataFrame -> DataFrame over the decoded frame; stays JVM-side,
         Catalyst sees through it. Mutually exclusive with processor.
+
+    The sink follows Spark's `foreachBatch` rule: each action on the
+    batch DataFrame recomputes it from the source, processor included.
+    A sink that runs more than one action on its batch caches the batch
+    itself (persist, then unpersist in a `finally`); the pipeline caches
+    it only on the dead-letter path, which runs two actions of its own.
     """
 
     spark: SparkSession
@@ -755,11 +775,14 @@ class SparkPipeline:
                         except Exception as e:  # noqa: BLE001
                             values.append(raw)
                             errors.append(f"{type(e).__name__}: {e}")
-                yield pd.DataFrame(
-                    {"value": values, "error": pd.array(errors, dtype=object)}
-                )
+                out = {"value": values}
+                if quarantine:
+                    out["error"] = pd.array(errors, dtype=object)
+                yield pd.DataFrame(out)
 
-        return df.mapInPandas(run_batches, "value binary, error string")
+        return df.mapInPandas(
+            run_batches, "value binary, error string" if quarantine else "value binary"
+        )
 
     def process(self, *, available_now: bool = True) -> Any:
         """Run the pipeline. available_now=True drains everything
@@ -774,9 +797,9 @@ class SparkPipeline:
         # metrics listener collects (R13; foreachBatch sinks otherwise
         # report no output-row metric).
         out = self._transformed()
-        has_error_col = "error" in out.columns
+        dlq = self.dead_letter_dir
         obs = [F.count(F.lit(1)).alias("rows_out")]
-        if has_error_col:
+        if dlq is not None:
             obs.append(
                 F.sum(
                     F.when(F.col("error").isNotNull(), 1).otherwise(0)
@@ -784,26 +807,27 @@ class SparkPipeline:
             )
         out = out.observe("pipeline", *obs)
 
+        # Without a DLQ the batch goes to the sink uncached (see the
+        # class docstring's foreachBatch rule).
         sink_fn = self.sink
-        if has_error_col:
-            inner, dlq = self.sink, self.dead_letter_dir
+        if dlq is not None:
+            inner = self.sink
 
             def sink_fn(batch_df: DataFrame, epoch_id: int) -> None:
                 # Persist: the DLQ write and the sink must not re-run
                 # the processor (double side effects) for each action.
                 batch_df.persist()
                 try:
-                    if dlq is not None:
-                        bad = batch_df.filter(F.col("error").isNotNull())
-                        if bad.limit(1).count():
-                            (
-                                bad.select(
-                                    "value", "error",
-                                    F.lit(epoch_id).alias("batch_id"),
-                                )
-                                .write.mode("append")
-                                .parquet(dlq)
+                    bad = batch_df.filter(F.col("error").isNotNull())
+                    if bad.limit(1).count():
+                        (
+                            bad.select(
+                                "value", "error",
+                                F.lit(epoch_id).alias("batch_id"),
                             )
+                            .write.mode("append")
+                            .parquet(dlq)
+                        )
                     # The user sink keeps its value-only contract; the
                     # DLQ write above happens first, so a sink failure
                     # still aborts the batch AFTER quarantine is durable.

@@ -38,10 +38,15 @@ _CONFED: WeakKeyDictionary = WeakKeyDictionary()
 # through py4j (~0.1s of driver time) on EVERY serve call of every
 # widened key (r14 verdict item 3).  table() hands every caller the
 # same cached DataFrame object per (session, sf_dir, name), and a
-# plan's scan partitioning is fixed for a fixed file set and session
-# conf, so the count is probed once per object and remembered.  Keyed
-# weakly so a dropped plan doesn't pin its entry.
+# plan's scan partitioning is fixed for a fixed file set and the
+# split-size confs in _SPLIT_CONFS, so the count is probed once per
+# object and re-probed only when those confs differ from the values
+# it was probed under (_SCAN_SPLIT).  Keyed weakly so a dropped plan
+# doesn't pin its entry.
 _SCAN_PARTS: WeakKeyDictionary = WeakKeyDictionary()
+_SCAN_SPLIT: WeakKeyDictionary = WeakKeyDictionary()
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
+                "spark.sql.files.openCostInBytes")
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -88,10 +93,13 @@ def widen_scan(df: DataFrame, *keys: str) -> DataFrame:
     follows the master), keeping the scaling measurement honest."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
+    split = tuple(spark.conf.get(k) for k in _SPLIT_CONFS)
     n = _SCAN_PARTS.get(df)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_PARTS[df] = n
+    if n is None or _SCAN_SPLIT.get(df) != split:
+        # a fresh projection, because a Dataset is planned once: df.rdd
+        # keeps the count of whatever confs df was first planned under
+        n = _SCAN_PARTS[df] = df.select("*").rdd.getNumPartitions()
+        _SCAN_SPLIT[df] = split
     if n >= target:
         return df
     return df.repartition(target, *keys) if keys else df.repartition(target)

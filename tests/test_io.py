@@ -53,6 +53,34 @@ def test_widen_scan_memoizes_partition_probe(spark):
     )
 
 
+def test_widen_scan_reprobes_when_split_size_changes(spark):
+    """The scan's partition count follows the split-size confs, so a
+    memo taken under one maxPartitionBytes must not answer for
+    another: the same DataFrame object is probed again and widen_scan
+    decides on the new count."""
+    from py_pubsub_pipeline_spark import tables
+
+    df = table(spark, SF_SMALL, "documents")
+    target = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    tables.widen_scan(df, "doc_id")
+    wide_n = tables._SCAN_PARTS[df]
+    assert wide_n < target
+    try:
+        # splits small enough for at least 2x the target partitions
+        size = os.path.getsize(os.path.join(SF_SMALL, "documents.parquet"))
+        spark.conf.set(key, str(size // (2 * target)))
+        fine_n = df.select("*").rdd.getNumPartitions()
+        assert fine_n >= target
+        assert tables.widen_scan(df, "doc_id") is df
+        assert tables._SCAN_PARTS[df] == fine_n
+    finally:
+        spark.conf.set(key, old)
+    tables.widen_scan(df, "doc_id")
+    assert tables._SCAN_PARTS[df] == wide_n
+
+
 def test_json_csv_roundtrip_matches_parquet(spark, tmp_path):
     src = table(spark, SF_SMALL, "nation")
     for fmt in ("json", "csv"):

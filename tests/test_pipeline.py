@@ -14,6 +14,7 @@ from py_pubsub_pipeline_spark.pipeline import (
     CollectingSink,
     FileStreamSource,
     IdempotentParquetSink,
+    MorUpsertSink,
     SparkPipeline,
 )
 
@@ -255,6 +256,41 @@ def test_dead_letter_isolates_poison_in_bulk_processor(spark, tmp_path):
     assert len(bad) == 1
     assert json.loads(bytes(bad[0]["value"]))["i"] == 2
     assert "poison payload" in bad[0]["error"]
+
+
+@pytest.mark.parametrize("case", ["no_dlq", "dlq", "mor_sink"])
+def test_processor_runs_once_per_message(spark, tmp_path, case):
+    """The processor may have side effects, so each message reaches it
+    once per batch run: the DLQ path caches the batch for its two
+    actions, a one-action sink needs no cache, and MorUpsertSink, which
+    writes its batch twice, caches it itself."""
+    tmp = str(tmp_path)
+    _drop(os.path.join(tmp, "in"), 5)
+    calls = os.path.join(tmp, "calls.txt")
+
+    def proc(m):
+        with open(calls, "a") as fh:
+            fh.write(f"{m['i']}\n")
+        return {"i": m["i"]}
+
+    sink = (MorUpsertSink(os.path.join(tmp, "mor"), key="value", order=["value"])
+            if case == "mor_sink" else CollectingSink())
+    SparkPipeline(
+        spark=spark,
+        source=FileStreamSource(os.path.join(tmp, "in")),
+        sink=sink,
+        processor=proc,
+        checkpoint_dir=os.path.join(tmp, "ckpt"),
+        dead_letter_dir=os.path.join(tmp, "dlq") if case == "dlq" else None,
+    ).process()
+
+    with open(calls) as fh:
+        assert sorted(int(line) for line in fh) == [0, 1, 2, 3, 4]
+    if case == "mor_sink":
+        rows = [r["value"] for r in sink.read_snapshot(spark).collect()]
+    else:
+        rows = sink.rows
+    assert sorted(json.loads(bytes(r))["i"] for r in rows) == [0, 1, 2, 3, 4]
 
 
 def test_column_processor_fast_path(spark, tmp_path):

@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import time
+from collections import Counter
 
 import pytest
 
@@ -148,6 +151,117 @@ def test_broker_fault_then_restart_from_checkpoint_no_loss_no_dupes(
     pipe(sink).process()
     got = sorted(json.loads(bytes(r))["i"] for r in sink.rows)
     assert got == [0, 1, 2, 3], "restart must deliver all, exactly once"
+
+
+def _topic_ids(topic: str) -> list[int]:
+    out = []
+    for name in sorted(os.listdir(topic)):
+        if name.endswith(".msg"):
+            with open(os.path.join(topic, name), "rb") as fh:
+                out.append(json.loads(fh.read())["i"])
+    return out
+
+
+def test_checkpoint_logs_are_checksummed(spark, tmp_path):
+    """The session writes checkpoints through Spark's FileSystem-based
+    manager on the checksummed local filesystem: every offset and
+    commit log entry has its .crc beside it, and a corrupted entry
+    fails the restart instead of being read."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    topic = str(tmp_path / "t")
+    for i in range(3):
+        publish(topic, json.dumps({"i": i}).encode())
+    ckpt = tmp_path / "ckpt"
+
+    def pipe():
+        return SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic, bulk_limit=2),
+            sink=CollectingSink(),
+            checkpoint_dir=str(ckpt),
+        )
+
+    pipe().process()
+    for log in ("offsets", "commits"):
+        names = set(os.listdir(ckpt / log))
+        assert {n for n in names if n.isdigit()} == {"0", "1"}, (log, names)
+        assert {".0.crc", ".1.crc"} <= names, (log, names)
+
+    entry = ckpt / "commits" / "1"
+    data = bytearray(entry.read_bytes())
+    data[-1] ^= 0x01
+    entry.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="Checksum"):
+        pipe().process()
+
+
+@pytest.mark.parametrize("dlq", [False, True])
+def test_stop_during_sink_then_restart_loses_nothing(spark, tmp_path, dlq):
+    """Fault matrix: stop() lands after the foreachBatch sink published
+    its batch but before it returned. A stop is not a failure: the
+    query and the listener's terminated record carry no exception.
+    Whether the stopped batch's commit lands depends on where the
+    interrupt hits the stream thread, so a restart on the same
+    checkpoint re-delivers at most that one batch and loses nothing."""
+    topic, out = str(tmp_path / "in"), str(tmp_path / "out")
+    for i in range(6):
+        publish(topic, json.dumps({"i": i}).encode())
+    published, stopping = threading.Event(), threading.Event()
+    first: list[int] = []
+
+    def publishing_sink(batch_df, epoch_id):
+        rows = batch_df.collect()
+        for r in rows:
+            publish(out, bytes(r.value))
+        if not published.is_set():
+            first.extend(json.loads(bytes(r.value))["i"] for r in rows)
+            published.set()
+            stopping.wait(60)
+            time.sleep(1.0)  # stop() is now waiting on this callback
+
+    def pipe():
+        return SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic, bulk_limit=2),
+            sink=publishing_sink,
+            processor=lambda m: m,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            dead_letter_dir=str(tmp_path / "dlq") if dlq else None,
+        )
+
+    stopped = pipe()
+    query = stopped.process(available_now=False)
+    try:
+        assert published.wait(120), "first batch never reached the sink"
+
+        def stop():
+            stopping.set()
+            query.stop()
+
+        stopper = threading.Thread(target=stop)
+        stopper.start()
+        stopper.join(120)
+        assert not stopper.is_alive() and not query.isActive
+        assert query.exception() is None
+        for _ in range(50):
+            if stopped.metrics.terminated is not None:
+                break
+            time.sleep(0.1)
+        assert stopped.metrics.terminated is not None
+        assert stopped.metrics.terminated["exception"] is None
+    finally:
+        stopped.killer.unwatch(query)
+        spark.streams.removeListener(stopped.metrics._listener())
+    assert sorted(_topic_ids(out)) == sorted(first)
+
+    pipe().process()
+    got = _topic_ids(out)
+    assert sorted(set(got)) == list(range(6)), "restart must lose nothing"
+    extra = Counter(got) - Counter(range(6))
+    assert set(extra) <= set(first) and max(extra.values(), default=1) == 1, got
 
 
 def test_batch_backfill_reads_topic_history(spark, tmp_path):
