@@ -18,6 +18,23 @@ import from site-packages and a task re-reads nothing. It reaches every
 Python-worker task of a `get_spark` session: the pipeline's
 `mapInPandas`, the `applyInPandas`/`mapInPandas` query kernels, UDFs.
 
+The JVM reaches its Python workers over Unix domain sockets
+(`spark.python.unix.domain.socket.enabled`), not loopback TCP. Over
+TCP, a worker waited about 40 ms per task in `pyarrow.ipc.open_stream`
+for the JVM's first Arrow message: Nagle's algorithm holding a small
+write until Linux's 40 ms delayed ACK. Over a Unix socket that wait is
+0.2 ms, and a 2-row `mapInPandas` task runs in 17.5 ms of executor time
+instead of 52.5 ms (medians of 30 tasks, `local[2]` on a 4-core box; a
+2-row JVM-only task runs in 1 ms). Every Python task of a `get_spark`
+session gains: the pipeline's `mapInPandas` (one per micro-batch), the
+query kernels, UDFs, collect-to-Python and accumulator updates. Over a
+Unix socket Spark's daemon skips its secret handshake, so the socket
+directory is the access control: `get_spark` makes a new one (mode
+0700, this user only) for each SparkContext it starts, where a socket
+path fits AF_UNIX's 107 bytes (the temporary directory, else /tmp),
+and removes it when the process exits. A session built elsewhere and
+passed in keeps TCP with its secret.
+
 The package ships to workers as a zip named by a hash of its sources
 (`ensure_package_on_workers`), so a session never ships another
 tree's code and repeated runs of one tree share one file.
@@ -39,8 +56,12 @@ elsewhere and passed in keeps its own manager.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs that every entry point (re)applies, so the
@@ -91,7 +112,6 @@ def _package_zip() -> str:
     by their hash: a process finds a zip only where a tree with the
     same sources wrote it, and repeated runs of one tree share it."""
     import hashlib
-    import tempfile
     import zipfile
 
     import py_pubsub_pipeline_spark as pkg
@@ -142,6 +162,28 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     spark.conf.set("spark.py_pubsub_pipeline.pkg_shipped", "true")
 
 
+# Longest AF_UNIX socket path on Linux: sun_path is 108 bytes, NUL included.
+_SUN_PATH_MAX = 107
+# A socket Spark binds in the directory: "/.<uuid4>.sock".
+_SOCKET_NAME_LEN = len("/.00000000-0000-0000-0000-000000000000.sock")
+
+
+def _socket_dir() -> str:
+    """A new directory for a session's Unix domain sockets, readable
+    and writable by this user only and removed when the process exits.
+
+    It lives in the temporary directory when a socket path in it fits
+    AF_UNIX's limit, else in /tmp; either way, under a name no other
+    user can pre-create (`mkdtemp`)."""
+    base = tempfile.gettempdir()
+    if len(os.fsencode(os.path.join(base, "pps-uds-XXXXXXXX"))) + _SOCKET_NAME_LEN > _SUN_PATH_MAX:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix="pps-uds-", dir=base)
+    os.chmod(path, 0o700)  # mkdtemp's mode is masked by the umask
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def get_spark(app_name: str = "py_pubsub_pipeline_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or get) a local session.
@@ -174,5 +216,12 @@ def get_spark(app_name: str = "py_pubsub_pipeline_spark",
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
     )
+    if SparkContext._active_spark_context is None:
+        # Read only when a SparkContext starts: an existing session
+        # keeps its transport, and no directory is made for it.
+        builder = (
+            builder.config("spark.python.unix.domain.socket.enabled", "true")
+            .config("spark.python.unix.domain.socket.dir", _socket_dir())
+        )
     spark = builder.getOrCreate()
     return apply_runtime_confs(spark)

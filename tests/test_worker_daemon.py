@@ -1,14 +1,16 @@
-"""The Python worker daemon (`worker_daemon`) and the package zip.
+"""The Python worker daemon (`worker_daemon`), the package zip and the
+Unix domain sockets the JVM reaches its Python workers through.
 
 Unit tests run the archive filter on fabricated archives; integration
 tests ask a Python worker task of a `get_spark` session what it
-imported and which archive importers it caches.
+imported, which archive importers it caches and how it is connected.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -18,6 +20,8 @@ from pathlib import Path
 
 import pytest
 
+from py_pubsub_pipeline_spark import session
+from py_pubsub_pipeline_spark.session import get_spark
 from py_pubsub_pipeline_spark.worker_daemon import redundant, strip_redundant_archives
 
 REPO = Path(__file__).resolve().parent.parent
@@ -97,7 +101,52 @@ def test_strip_removes_dropped_entries_and_their_importers(site, tmp_path):
     assert list(cache) == [shipped]
 
 
+def test_socket_dir_is_private_under_any_umask_and_fits_af_unix(tmp_path, monkeypatch):
+    deep = tmp_path.joinpath(*["deep-temporary-directory"] * 3)
+    deep.mkdir(parents=True)
+    monkeypatch.setattr(session.tempfile, "tempdir", str(deep))
+    old = os.umask(0o777)
+    try:
+        path = session._socket_dir()
+    finally:
+        os.umask(old)
+    try:
+        st = os.stat(path)
+        assert stat.S_IMODE(st.st_mode) == 0o700 and st.st_uid == os.getuid()
+        # a socket path in the deep directory would not fit
+        assert os.path.dirname(path) == "/tmp"
+        assert len(os.path.join(path, ".00000000-0000-0000-0000-000000000000.sock")) <= 107
+    finally:
+        os.rmdir(path)
+
+
 # ---------------------------------------------------- inside a session
+
+
+def test_get_spark_names_one_private_socket_dir(spark, monkeypatch):
+    name = "spark.python.unix.domain.socket.dir"
+    path = spark.sparkContext.getConf().get(name)
+    monkeypatch.setattr(session, "_socket_dir", lambda: pytest.fail("made a second directory"))
+    again = get_spark("tests")
+    assert again.sparkContext.getConf().get(name) == path
+    st = os.stat(path)
+    assert stat.S_ISDIR(st.st_mode) and st.st_uid == os.getuid()
+    assert stat.S_IMODE(st.st_mode) == 0o700
+
+
+def test_workers_connect_over_unix_sockets(spark):
+    def probe(batches):
+        import os
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "")]})
+
+    # Spark writes "True"; its daemon and workers compare it lowercased.
+    uds = spark.range(1, numPartitions=1).mapInPandas(probe, "uds string").first().uds
+    assert uds.lower() == "true"
 
 
 def test_worker_imports_pyspark_from_a_directory(spark):
@@ -161,6 +210,8 @@ _FRESH_SESSION = textwrap.dedent('''
     from py_pubsub_pipeline_spark.session import _package_zip, ensure_package_on_workers, get_spark
     spark = get_spark("fresh")
     ensure_package_on_workers(spark)
+    acc = spark.sparkContext.accumulator(0)
+    spark.sparkContext.parallelize(range(10), 2).foreach(lambda x: acc.add(x))
 
     def task(batches):
         import pyarrow as pa, pyspark, py_pubsub_pipeline_spark as p
@@ -172,7 +223,9 @@ _FRESH_SESSION = textwrap.dedent('''
             "encoded": byte_encode_json({"a": 1}).decode(), "pyspark": pyspark.__file__})]})
 
     report = json.loads(spark.range(1, numPartitions=1).mapInArrow(task, "r string").first().r)
-    report.update(driver_version=pkg.__version__, shipped=os.path.basename(_package_zip()))
+    socket_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    report.update(driver_version=pkg.__version__, shipped=os.path.basename(_package_zip()),
+                  accumulated=acc.value, socket_dir=socket_dir)
     spark.stop()
     print("REPORT " + json.dumps(report))
 ''')
@@ -181,9 +234,13 @@ _FRESH_SESSION = textwrap.dedent('''
 @pytest.fixture(scope="module")
 def fresh_session(tmp_path_factory) -> dict:
     """Report of a `get_spark` session started in another process,
-    from a working directory outside the repository."""
+    from a working directory outside the repository, with Python's and
+    the JVM's temporary directory too deep for an AF_UNIX socket path."""
     cwd = tmp_path_factory.mktemp("elsewhere")
-    env = {**os.environ, "TMPDIR": str(cwd), "SPARK_GRAFT_CPUS": "1", "SPARK_DRIVER_MEM": "1g"}
+    deep = cwd.joinpath(*["deep-temporary-directory"] * 3)
+    deep.mkdir(parents=True)
+    env = {**os.environ, "TMPDIR": str(deep), "SPARK_GRAFT_CPUS": "1", "SPARK_DRIVER_MEM": "1g"}
+    env["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={deep} {env.get('JAVA_TOOL_OPTIONS', '')}".strip()
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and Path(p).resolve() != REPO
     )
@@ -193,7 +250,7 @@ def fresh_session(tmp_path_factory) -> dict:
     )
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("REPORT ")]
     assert out.returncode == 0 and lines, out.stderr[-3000:]
-    return json.loads(lines[-1][len("REPORT "):])
+    return {**json.loads(lines[-1][len("REPORT "):]), "deep_tmp": str(deep)}
 
 
 def test_daemon_module_resolves_outside_repo_root(fresh_session):
@@ -205,3 +262,11 @@ def test_workers_import_current_package_not_stale_pid_zip(fresh_session):
     assert fresh_session["version"] == fresh_session["driver_version"]
     # imported from the zip the session shipped, named by its sources
     assert f"{fresh_session['shipped']}/py_pubsub_pipeline_spark/" in fresh_session["file"]
+
+
+def test_accumulator_updates_reach_driver_from_deep_temp_dir(fresh_session):
+    assert fresh_session["accumulated"] == 45
+    # the sockets went where their paths fit, not into the deep directory
+    assert not fresh_session["socket_dir"].startswith(fresh_session["deep_tmp"])
+    # and the directory went with the process
+    assert not os.path.exists(fresh_session["socket_dir"])
