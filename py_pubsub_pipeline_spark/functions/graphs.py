@@ -12,8 +12,8 @@
 Each definition has a Spark builder `(spark, sf_dir) -> DataFrame` and
 the DuckDB CTE fragment the oracles splice in (the
 functions/blocking.py pattern: one module, two renderings).  Builders
-return UN-checkpointed frames so every caller keeps its own
-checkpoint choice (none, lazy or eager) on top of an unchanged plan.
+return UN-checkpointed frames so every caller decides whether to
+checkpoint (functions/ckpt.py) on top of an unchanged plan.
 """
 
 from __future__ import annotations

@@ -46,6 +46,8 @@ import json
 import logging
 import os
 import signal
+import time
+import uuid
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -546,16 +548,43 @@ class PipelineMetricsListener:
     Collected records (``batches``) are plain dicts, queryable by
     tests and ops tooling; each batch also logs one line at the
     reference's granularity. onQueryTerminated carries the commit
-    status of the run as a whole (exception => batch NOT committed)."""
+    status of the run as a whole (exception => batch NOT committed).
+
+    A listener sees every query of its session, so it records only its
+    own pipeline's: the pipeline starts its query under ``query_name``,
+    fixed before the start, and the start event (delivered before
+    ``start()`` returns) binds that name to the run id the terminated
+    event carries. On its query's termination the listener removes
+    itself from the session it was attached to."""
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
         self.terminated: dict | None = None
+        self.query_name = f"pipeline-{uuid.uuid4().hex}"
+        self._run_id: str | None = None
+        self._spark: SparkSession | None = None
         self._delegate = None
+
+    def attach(self, spark: SparkSession) -> None:
+        """Register the listener with `spark`'s streaming queries."""
+        self._spark = spark
+        spark.streams.addListener(self._listener())
+
+    def detach(self) -> None:
+        """Remove the listener from its session (a no-op when it is
+        not registered)."""
+        if self._spark is not None:
+            self._spark.streams.removeListener(self._listener())
 
     # -- StreamingQueryListener protocol (duck-typed via _listener()) --
 
+    def _on_started(self, event) -> None:  # noqa: ANN001
+        if event.name == self.query_name:
+            self._run_id = str(event.runId)
+
     def _on_progress(self, progress) -> None:  # noqa: ANN001
+        if progress.name != self.query_name:
+            return
         observed = progress.observedMetrics.get("pipeline")
         obs = observed.asDict() if observed is not None else {}
         rec = {
@@ -575,9 +604,12 @@ class PipelineMetricsListener:
             rec["duration_ms"].get("commitOffsets"),
         )
 
-    def _on_terminated(self, event) -> None:  # noqa: ANN001
+    def _on_terminated(self, event) -> bool:  # noqa: ANN001
+        if str(event.runId) != self._run_id:
+            return False
         self.terminated = {
             "query_id": str(event.id),
+            "run_id": self._run_id,
             "exception": event.exception,
             "committed": event.exception is None,
         }
@@ -586,6 +618,7 @@ class PipelineMetricsListener:
         else:
             log.error("query %s FAILED (batch not committed): %s",
                       event.id, event.exception)
+        return True
 
     def _listener(self):  # noqa: ANN202
         """Build the pyspark StreamingQueryListener wrapping this
@@ -600,6 +633,7 @@ class PipelineMetricsListener:
         class _L(StreamingQueryListener):
             def onQueryStarted(self, event) -> None:  # noqa: ANN001
                 log.info("query %s started (run %s)", event.id, event.runId)
+                outer._on_started(event)
 
             def onQueryProgress(self, event) -> None:  # noqa: ANN001
                 outer._on_progress(event.progress)
@@ -608,7 +642,8 @@ class PipelineMetricsListener:
                 pass
 
             def onQueryTerminated(self, event) -> None:  # noqa: ANN001
-                outer._on_terminated(event)
+                if outer._on_terminated(event):
+                    outer.detach()
 
         self._delegate = _L()
         return self._delegate
@@ -839,8 +874,9 @@ class SparkPipeline:
                 finally:
                     batch_df.unpersist()
 
-        self.spark.streams.addListener(self.metrics._listener())
-        writer = out.writeStream.foreachBatch(sink_fn)
+        self.metrics.attach(self.spark)
+        writer = out.writeStream.queryName(self.metrics.query_name)
+        writer = writer.foreachBatch(sink_fn)
         if self.checkpoint_dir:
             writer = writer.option("checkpointLocation", self.checkpoint_dir)
         query = writer.start()
@@ -855,13 +891,12 @@ class SparkPipeline:
                 query.stop()
                 self.killer.unwatch(query)
                 # Listener events are delivered async; for the bounded
-                # run give the terminated event a moment to land so
-                # callers can read metrics immediately after process().
-                import time as _t
-
+                # run give this query's terminated event a moment to
+                # land so callers can read metrics right after process().
+                run_id = str(query.runId)
                 for _ in range(50):
-                    if self.metrics.terminated is not None:
+                    if (self.metrics.terminated or {}).get("run_id") == run_id:
                         break
-                    _t.sleep(0.1)
-                self.spark.streams.removeListener(self.metrics._listener())
+                    time.sleep(0.1)
+                self.metrics.detach()
         return query

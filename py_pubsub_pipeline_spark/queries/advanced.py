@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exprs import dsum, sql_dsum
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..functions.graphs import (
     SQL_PURCHASE_EDGES,
     SUPP_OFFSET,
@@ -590,7 +590,7 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = c.groupBy(
         F.col("c_nationkey").alias("nat"),
         F.col("c_mktsegment").alias("seg"),
-    ).agg(F.count("*").alias("n")).localCheckpoint(eager=True, storageLevel=_DISK)
+    ).agg(F.count("*").alias("n")).transform(checkpoint)
     tot = cells.agg(F.sum("n").alias("t"))
     n_nat = cells.select("nat").distinct().count()
     n_seg = cells.select("seg").distinct().count()
@@ -636,7 +636,7 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
                        / (F.col("s").cast("double") / _IPF_SNAP))
                 ).alias("ws"),
             )
-        ).localCheckpoint(eager=True, storageLevel=_DISK)
+        ).transform(checkpoint)
     return w.join(cells, ["nat", "seg"]).select(
         F.col("nat").alias("c_nationkey"),
         F.col("seg").alias("c_mktsegment"),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import davg, dsum, sql_davg, sql_dsum
 from ..functions.splitwin import split_window
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..registry import query
 from ..tables import table, widen_scan
 
@@ -1460,7 +1460,7 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_mktsegment").alias("seg"),
                  F.col("o_orderpriority").alias("prio"))
         .agg(F.count("*").alias("obs"))
-        .localCheckpoint(eager=False, storageLevel=_DISK)  # cells feed marginals AND terms
+        .transform(checkpoint)  # cells feed marginals AND terms
     )
     rm = cells.groupBy("seg").agg(F.sum("obs").alias("rt"))
     cm = cells.groupBy("prio").agg(F.sum("obs").alias("ct"))

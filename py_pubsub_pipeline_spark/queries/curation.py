@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.splitwin import split_window
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..registry import query
 from ..tables import table
 
@@ -181,7 +181,7 @@ def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bucket assignment — three consumers, each otherwise re-
         # scanning and re-aggregating the fact table; one value-
         # cardinality materialization instead.
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     cum = split_window(hist, ["v"], running_sums={"cum": "cnt"})
     tot = hist.agg(F.sum("cnt").alias("n"))
@@ -1270,7 +1270,7 @@ def ml_crossval_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         m(F.col("x") * F.col("x"), 38).alias("sxx"),
         m(F.col("x") * F.col("y"), 38).alias("sxy"),
         m(F.col("y") * F.col("y"), 38).alias("syy"),
-    ).localCheckpoint(eager=False, storageLevel=_DISK)  # k rows; reused by tot AND pf —
+    ).transform(checkpoint)  # k rows; reused by tot AND pf —
     # without the barrier both consumers re-scan the fact table
     tot = fm.agg(*[F.sum(c).alias(c)
                    for c in ("n", "sx", "sy", "sxx", "sxy", "syy")])
@@ -1548,7 +1548,7 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.floor(F.col("p") * _BRIER_BINS).cast("int"),
                 F.lit(_BRIER_BINS - 1)).alias("b"),
         "p", "y",
-    ).localCheckpoint(eager=False, storageLevel=_DISK)  # feeds per-bin AND global brier
+    ).transform(checkpoint)  # feeds per-bin AND global brier
 
     def dm(e):
         return F.sum(e.cast("decimal(18,9)")).cast("double") / F.count("*")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import DISK as _CKPT_DISK
+from ..functions.ckpt import checkpoint
 from ..functions.splitwin import split_window, str_bucket
 from ..registry import query
 from ..tables import table, widen_scan
@@ -712,7 +712,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sig feeds TWO broadcasts (sa and sb); each broadcast executes
         # its subtree, so without a checkpoint the shingle + 32-min-agg
         # pass runs twice.  One doc-cardinality materialization instead.
-    ).localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+    ).transform(checkpoint)
     sa = sig.select(
         F.col("doc_id").alias("a_id"),
         *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_EST_HASHES)],

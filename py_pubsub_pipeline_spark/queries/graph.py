@@ -15,14 +15,10 @@ Scale notes:
   upgrade is alternating large-star/small-star (Kiveris et al.,
   "Connected Components in MapReduce and Beyond", SoCC'14), which
   converges in O(log^2 n) rounds with the same per-round shape.
-- `localCheckpoint(eager=True, storageLevel=DISK_ONLY)` after every
-  round truncates the plan lineage — without it the logical plan
-  doubles per iteration and analysis cost explodes (the classic
-  iterative-Spark trap). DISK_ONLY because the default storage level
-  pins every superseded round's blocks in executor storage memory
-  until driver GC: at sf10 the co-purchase graph's per-round edge
-  sets accumulated past an 8g heap and killed the JVM (round-7 sweep
-  find; see functions/ckpt.py).
+- Every round is checkpointed (functions/ckpt.py), which truncates
+  the plan lineage — without it the logical plan doubles per
+  iteration and analysis cost explodes (the classic iterative-Spark
+  trap).
 - The convergence test (did any label change?) is a count on the
   joined old/new frames — one extra small job per round, driver-side
   control flow only; all data stays distributed.
@@ -37,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..functions.graphs import (
     SQL_COPURCHASE_CTES,
     copurchase_edges,
@@ -62,7 +58,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     undirected (one row per direction). Returns (doc_id, component)
     where component = min doc_id reachable."""
     labels = vertices.select("doc_id", F.col("doc_id").alias("component"))
-    labels = labels.localCheckpoint(eager=True, storageLevel=_DISK)
+    labels = checkpoint(labels)
     changed = -1
     for _ in range(max_rounds):
         prop = (
@@ -85,7 +81,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                     "old_component"
                 ),
             )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         changed = (
             merged.filter(F.col("component") < F.col("old_component"))
@@ -138,7 +134,7 @@ def connected_components_star(
     Both are semantics-preserving (connectivity invariant); the
     fixpoint is a forest of stars rooted at component minima.
     """
-    e = _symmetrize(edges).localCheckpoint(eager=True, storageLevel=_DISK)
+    e = checkpoint(_symmetrize(edges))
     rounds = 0
     for _ in range(max_rounds):
         # large-star: emit (v, m) for v in Γ(u), v > u. m is computed
@@ -153,7 +149,7 @@ def connected_components_star(
             .filter(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        e2 = _symmetrize(large).localCheckpoint(eager=True, storageLevel=_DISK)
+        e2 = checkpoint(_symmetrize(large))
         # small-star: emit (v, m) for v in Γ(u), v <= u, plus (u, m)
         le = e2.filter(F.col("v") <= F.col("u"))
         m_le = le.groupBy("u").agg(
@@ -164,7 +160,7 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(m_le.select("u", F.col("m").alias("v")))
         )
-        e3 = _symmetrize(small).localCheckpoint(eager=True, storageLevel=_DISK)
+        e3 = checkpoint(_symmetrize(small))
         rounds += 1
         # Fixpoint: the edge set is stable (stars everywhere).
         # |e3| == |e| AND e3 \ e == 0 (multiset) together imply
@@ -235,7 +231,7 @@ def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
     ).unionByName(
         pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    ).transform(checkpoint)
     # Iterate only over vertices that HAVE edges (the near-dup graph is
     # a sliver of the corpus); the untouched majority joins in as
     # their-own-component rows at the end — no per-round work for them.
@@ -280,7 +276,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximates) keep per-key fan-in bounded."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    ).transform(checkpoint)
     e1 = pairs.alias("e1")
     e2 = pairs.alias("e2")
     e3 = pairs.alias("e3")
@@ -464,8 +460,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds to fixpoint (O(peel depth)); the bounded form is what a
     production job schedules. The w >= COPURCHASE_MIN_W support
     filter is the same co-occurrence denoising as agg_market_basket's."""
-    e = copurchase_edges(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_DISK)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     traj = []
     for r in range(1, _KCORE_ROUNDS + 1):
         keep = (
@@ -474,13 +469,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u")
             # keep feeds BOTH semi-join sides; without a checkpoint the
             # degree agg over the round's edge set runs twice.
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         e = (
             e.join(keep, "u")
             .join(keep.withColumnRenamed("u", "v"), "v")
             .select("u", "v")
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         traj.append(
             e.agg(
@@ -681,8 +676,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup join; per-node ratios quantize through DECIMAL before the
     averages. The symmetric edge list makes adjacency a direct
     equi-join, no direction cases."""
-    e = copurchase_edges(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_DISK)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     deg = e.groupBy("u").agg(F.count("*").alias("d"))
     e1 = e.select(F.col("v").alias("z"), F.col("u").alias("wu"))
     e2 = e.select(F.col("u").alias("z"), F.col("v").alias("wv"))
@@ -910,24 +904,13 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one edge-keyed hash join (frontier against
     the adjacency) + a distinct + an anti join against the visited
     set — all vertex-keyed shuffles, frontier-sized not graph-sized;
-    rounds checkpoint to DISK_ONLY (functions/ckpt.py) so lineage and
-    executor storage stay flat in iteration count.  The bounded round
+    rounds checkpoint (functions/ckpt.py) so lineage and executor
+    storage stay flat in iteration count.  The bounded round
     count is the production posture (distance saturates at the
     diameter of interest); the histogram output is schema-bounded."""
-    e = copurchase_edges(spark, sf_dir).localCheckpoint(
-        eager=True, storageLevel=_DISK)
+    e = checkpoint(copurchase_edges(spark, sf_dir))
     verts = e.select("u").distinct()
-    # LAZY round checkpoints (r15): the round count is FIXED — no
-    # driver decision reads a round's result — so materialization can
-    # fold into the final action instead of one job barrier per round
-    # (lineage truncation is plan-level and identical either way).
-    # Interleaved A/B at sf0.1: every lazy run beat every eager run
-    # (3.44-3.49 s vs 3.61-3.67), identical rows.  Convergence-CHECKED
-    # loops (connected_components, kcore, star-CC) cannot go lazy —
-    # their drivers inspect per-round counts.
-    frontier = verts.filter(F.col("u") % _BFS_SEED_MOD == 0).localCheckpoint(
-        eager=False, storageLevel=_DISK
-    )
+    frontier = checkpoint(verts.filter(F.col("u") % _BFS_SEED_MOD == 0))
     visited = frontier
     hist = [
         frontier.agg(
@@ -941,8 +924,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("v").alias("u"))
             .distinct()
             .join(visited, "u", "left_anti")
-            # eager=False: see the seed checkpoint note above
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         # frontier is already checkpointed, so the union's lineage is
         # flat without re-materializing the WHOLE visited set each
@@ -1063,20 +1045,20 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs_ckpt = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     cc_edges = pairs_ckpt.select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
     ).unionByName(
         pairs_ckpt.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
-    ).localCheckpoint(eager=True, storageLevel=_DISK)
+    ).transform(checkpoint)
     touched = cc_edges.select(F.col("u").alias("doc_id")).distinct()
     cc_labels = connected_components(touched, cc_edges)
     comp = cc_labels.unionByName(
         docs.join(touched, "doc_id", "left_anti").select(
             "doc_id", F.col("doc_id").alias("component")
         )
-    ).localCheckpoint(eager=False, storageLevel=_DISK)
+    ).transform(checkpoint)
     asg = comp.withColumn(
         "split",
         F.when(
@@ -1169,7 +1151,7 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     edges = pairs.select(
         F.col("a_id").alias("u"), F.col("b_id").alias("v")
@@ -1178,7 +1160,7 @@ def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("u").alias("doc_id"))
         .unionByName(edges.select(F.col("v").alias("doc_id")))
         .distinct()
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     labels = connected_components_star(touched, edges)
     singletons = docs.join(touched, "doc_id", "left_anti").select(

@@ -36,7 +36,7 @@ Scale notes:
   outputPartitioning (UnknownPartitioning on the RDD scan), so the
   exchange bought no layout reuse in ANY regime — it was a dead
   edge-cardinality shuffle, removed per guide §2.4.
-- `localCheckpoint(eager=True)` per round truncates lineage —
+- A checkpoint per round (functions/ckpt.py) truncates lineage —
   without it the plan doubles per iteration (the iterative-Spark
   trap, same as connected_components).
 - Dangling mass: the graph is symmetrized (u→v and v→u), so every
@@ -54,7 +54,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..functions.graphs import (
     SQL_PURCHASE_CTES,
     SQL_PURCHASE_VERTICES,
@@ -119,7 +119,7 @@ def _edges_with_outdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight — the deg join's output layout is kept as-is."""
     edges = purchase_edges(spark, sf_dir)
     deg = edges.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
-    return edges.join(deg, "u").localCheckpoint(eager=True, storageLevel=_DISK)
+    return edges.join(deg, "u").transform(checkpoint)
 
 
 def _damped_round(ed: DataFrame, base: DataFrame, ranks: DataFrame,
@@ -154,7 +154,7 @@ def _damped_round(ed: DataFrame, base: DataFrame, ranks: DataFrame,
                 )
             ).alias("pr"),
         )
-        .localCheckpoint(eager=True, storageLevel=_DISK)
+        .transform(checkpoint)
     )
 
 
@@ -212,16 +212,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank — without it the plan doubles per round).
     Determinism: the vote multiset and tie-break are engine-
     independent, so the oracle replays the exact label sequence."""
-    # LAZY checkpoints throughout (r15): LPA's round count is FIXED —
-    # no driver decision reads a round's result — so materialization
-    # folds into the final action instead of one job barrier per round
-    # (lineage truncation is plan-level and identical either way).
-    # Force-lazy interleaved A/B at sf0.1: every lazy run beat every
-    # eager run (5.13-5.33 s vs 5.94-6.47), identical rows.
-    edges = purchase_edges(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_DISK)
-    verts = purchase_vertices(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_DISK)
+    edges = checkpoint(purchase_edges(spark, sf_dir))
+    verts = checkpoint(purchase_vertices(spark, sf_dir))
     lbl = verts.select("node", F.col("node").alias("lbl"))
     # Top-1 stays a row_number window: the max(struct(c, -lbl)) hash-
     # agg form was tried (r14 optimization round) and measured a small
@@ -243,8 +235,7 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
             cnt.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("node", "lbl")
-            # eager=False: see the edges checkpoint note above
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
     return lbl.select("node", F.col("lbl").alias("community"))
 
@@ -257,8 +248,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer and supplier; supplier ids are offset by 10M into a
     disjoint id space."""
     ed = _edges_with_outdeg(spark, sf_dir)
-    verts = purchase_vertices(spark, sf_dir).localCheckpoint(
-        eager=True, storageLevel=_DISK)
+    verts = checkpoint(purchase_vertices(spark, sf_dir))
     ranks = verts.select("node", F.lit(1.0).cast("double").alias("pr"))
     for _ in range(N_ITER):
         ranks = _damped_round(ed, verts, ranks, [], F.lit(TELEPORT))
@@ -334,18 +324,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once (not repartitioned: see the module header) and
     localCheckpoint truncates lineage per round. Scores move as
     (id, double) pairs, never adjacency."""
-    # LAZY checkpoints throughout (r15): HITS runs a FIXED round count
-    # — no driver decision reads a round's result — so materialization
-    # folds into the final action instead of one job barrier per
-    # half-round (the ar/hr checkpoints were already lazy; this
-    # extends it to eb/a/h).  Force-lazy interleaved A/B at sf0.1:
-    # lazy min 4.84 / med 5.03 vs eager 4.96 / 5.04 — lazy won every
-    # paired position; identical rows.  The r14 lineage analysis is
-    # unchanged: ar/hr feed both a projection and the broadcast-MAX
-    # subquery, so they stay checkpointed (one materialization serves
-    # both); laziness only moves WHEN the blocks land.
-    eb = purchase_pairs(spark, sf_dir).localCheckpoint(
-        eager=False, storageLevel=_DISK)
+    eb = checkpoint(purchase_pairs(spark, sf_dir))
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
     h = eb.select("cust").distinct().select(
         F.col("cust").alias("node"), F.lit(1.0).alias("sc")
@@ -361,26 +340,26 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the whole join+agg (2x per half-round).  Same
             # MATERIALIZED discipline the oracle needs (see
             # _hits_oracle docstring), vertex-cardinality rows only.
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         amax = ar.agg(F.max("s").alias("mx"))
         a = ar.crossJoin(F.broadcast(amax)).select(
             "node",
             (F.col("s").cast("double") / F.col("mx").cast("double"))
             .alias("sc"),
-        ).localCheckpoint(eager=False, storageLevel=_DISK)
+        ).transform(checkpoint)
         hr = (
             eb.join(a.withColumnRenamed("node", "supp"), "supp")
             .groupBy(F.col("cust").alias("node"))
             .agg(F.sum(snap(F.col("sc"))).alias("s"))
-            .localCheckpoint(eager=False, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         hmax = hr.agg(F.max("s").alias("mx"))
         h = hr.crossJoin(F.broadcast(hmax)).select(
             "node",
             (F.col("s").cast("double") / F.col("mx").cast("double"))
             .alias("sc"),
-        ).localCheckpoint(eager=False, storageLevel=_DISK)
+        ).transform(checkpoint)
     hubs = h.select("node", F.lit("hub").alias("role"),
                     F.round("sc", 6).alias("score"))
     auths = a.select("node", F.lit("authority").alias("role"),
@@ -444,13 +423,11 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final sum of {N_KATZ_ITER} doubles is a fixed-order chain.
 
     Scale: per step one edge join + one destination-keyed agg on the
-    localCheckpointed (not repartitioned: see the module header) edge
+    checkpointed (not repartitioned: see the module header) edge
     list — the PageRank two-shuffle profile; walk terms move as
     (id, double) pairs."""
-    edges = purchase_edges(spark, sf_dir).localCheckpoint(
-        eager=True, storageLevel=_DISK)
-    verts = edges.select(F.col("u").alias("node")).distinct() \
-        .localCheckpoint(eager=True, storageLevel=_DISK)
+    edges = checkpoint(purchase_edges(spark, sf_dir))
+    verts = checkpoint(edges.select(F.col("u").alias("node")).distinct())
     snap = lambda c: F.floor(c * 1e12 + 0.5).cast("decimal(28,0)")  # noqa: E731
     x = verts.select("node", F.lit(1.0).alias("sc"))
     terms = []
@@ -463,7 +440,7 @@ def graph_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * (F.sum(snap(F.col("sc"))).cast("double") / 1e12))
                 .alias("sc")
             )
-            .localCheckpoint(eager=True, storageLevel=_DISK)
+            .transform(checkpoint)
         )
         terms.append(x)
     out = verts
@@ -519,10 +496,10 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges-by-source join plus one destination hash agg — only the
     vertex-cardinality rank table moves; the edge list is
     checkpointed once (not repartitioned: see the module header) and
-    every round reuses it; rounds checkpoint DISK_ONLY (the round-7
-    lesson).  PPR sparsity: mass stays concentrated near seeds, so the
-    rank table a real run carries can additionally be thresholded —
-    documented, not applied, since the oracle replays the dense form."""
+    every round reuses it; every round is checkpointed too.  PPR
+    sparsity: mass stays concentrated near seeds, so the rank table a
+    real run carries can additionally be thresholded — documented,
+    not applied, since the oracle replays the dense form."""
     ed = _edges_with_outdeg(spark, sf_dir)
     sv = (
         purchase_vertices(spark, sf_dir)
@@ -531,7 +508,7 @@ def graph_ppr_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("node") % PPR_SEED_MOD == 0, F.lit(1.0))
             .otherwise(F.lit(0.0)).cast("double").alias("s0"),
         )
-        .localCheckpoint(eager=True, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     ranks = sv.select("node", "s0", F.col("s0").alias("pr"))
     for _ in range(PPR_ITER):

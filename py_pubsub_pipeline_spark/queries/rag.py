@@ -40,7 +40,7 @@ from ..functions.dp_noise import (
     sql_laplace,
     sql_laplace_e4,
 )
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..registry import query
 from ..tables import table, widen_scan
 from .dedup import _grams
@@ -2521,13 +2521,13 @@ def rag_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # rt feeds FOUR consumers (q, both retrieval passes, fb_terms);
     # without a lineage cut each re-derives the shingle explosion +
-    # df-filter.  Lazy local checkpoint: materialized once inside the
-    # timed action, disk-backed, nothing survives the query (guide
-    # §2.3 reuse discipline, same pattern as the graph family).
+    # df-filter.  The checkpoint materializes it once, disk-backed,
+    # and nothing survives the query (guide §2.3 reuse discipline,
+    # same pattern as the graph family).
     rt = (
         toks.join(rare, "tok")
         .select("doc_id", "tok")
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     q = (
         rt.filter(F.col("doc_id") < PRF_NQ)

@@ -29,7 +29,7 @@ from ..functions.blocking import (
     sql_sign_prefix,
 )
 from ..registry import query
-from ..functions.ckpt import DISK as _CKPT_DISK
+from ..functions.ckpt import checkpoint
 from ..tables import table, widen_scan
 
 TOP_K = 5
@@ -928,7 +928,7 @@ def ml_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus WITH its full embedding vectors K times per round; the
     # array_min ships nothing and keeps the exact (d2, k)
     # lexicographic order semantics (min d2, ties -> smallest k).
-    # Each round's K x dim update table lazily DISK-checkpoints so
+    # Each round's K x dim update table is checkpointed so
     # round i+1's broadcast (and the final fingerprint agg) read a
     # 256-row materialization instead of re-executing the chain.
     assigned = None
@@ -965,7 +965,7 @@ def ml_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.count("*")
                 ).alias("val")
             )
-            .localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+            .transform(checkpoint)
         )
         if it < KM_ITERS - 1:
             cent = upd.groupBy("k").agg(
@@ -1172,7 +1172,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("j")
             .agg(F.sum((F.col("s") * F.col("xj")).cast("decimal(18,9)"))
                  .cast("double").alias("wj"))
-            .localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+            .transform(checkpoint)
         )
         nrm = w.agg(
             F.sqrt(F.sum((F.col("wj") * F.col("wj")).cast("decimal(28,12)"))
@@ -2005,10 +2005,7 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     unclusterable data) falls as the corpus grows while absolute
     per-query cost stays flat.  Index build is one-time: linear pair
     work in the bucketed layers, quadratic only in the 6.25% sample.
-    Rounds localCheckpoint like graph_bfs_hops so lineage stays
-    flat."""
-    from ..functions.ckpt import DISK as _DISK
-
+    Rounds checkpoint like graph_bfs_hops so lineage stays flat."""
     e = table(spark, sf_dir, "embeddings")
     v = e.select("vec_id", _dvec("embedding", "e"))
     q = (
@@ -2034,18 +2031,7 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= KGS_SEEDS)
         .select("qid", "cand", "cm")
-        # LAZY checkpoints throughout the beam loop (r15, VERDICT r14
-        # item 4): lineage truncation happens at plan level either way
-        # (the checkpoint returns a LogicalRDD-backed frame
-        # immediately), but lazy materialization folds the seed scan
-        # and all {KGS_ROUNDS} expansion rounds into the FINAL action
-        # instead of one driver job barrier per round — the 100 TB
-        # concern VERDICT r14 flagged for the eager pattern.  Probed
-        # same-session interleaved at sf0.1: identical rows, min
-        # 5.73 s lazy vs 5.98 eager, med 7.10 vs 8.27 (box-noisy
-        # session; direction consistent), plus cross-round broadcast
-        # reuse becomes possible inside the single job.
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        .transform(checkpoint)
     )
     und = _kgs_index_fixture(spark, sf_dir)
     for _ in range(KGS_ROUNDS):
@@ -2064,13 +2050,12 @@ def sim_knn_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("qid", "cand").agg(F.max("cm").alias("cm"))
         )
         # checkpoint only the round's NEW candidates (frontier-sized)
-        # and union lazily: re-checkpointing the whole visited set
-        # wrote O(|visited|) per round — O(budget * rounds) total.
-        # eager=False: see the seed checkpoint note above.
+        # and union: re-checkpointing the whole visited set wrote
+        # O(|visited|) per round — O(budget * rounds) total.
         new = scored.join(
             F.broadcast(visited.select("qid", "cand")),
             ["qid", "cand"], "left_anti",
-        ).localCheckpoint(eager=False, storageLevel=_DISK)
+        ).transform(checkpoint)
         visited = visited.unionByName(new)
     return (
         visited.withColumn("rk", F.row_number().over(w))
@@ -2630,7 +2615,7 @@ def sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("pos", "val"))),
             lambda st: st.getField("val"),
         ).alias("c")
-    ).localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+    ).transform(checkpoint)
 
     def dyn_d2u():
         es = F.slice("e", F.col("m") * PQ_SUB + 1, PQ_SUB)
@@ -3736,7 +3721,7 @@ def emb_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emb_pca_power discipline).
     cx = ex.join(F.broadcast(mu), "j").select(
         "vec_id", "j", (F.col("xj") - F.col("muj")).alias("cj")
-    ).localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+    ).transform(checkpoint)
     v = spark.range(_PCA_DIM).select(
         F.col("id").alias("j"),
         F.lit(1.0 / _PCA_DIM ** 0.5).alias("vj"))
@@ -3750,7 +3735,7 @@ def emb_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
             cx.join(s, "vec_id")
             .groupBy("j")
             .agg(dq(F.col("s") * F.col("cj")).alias("wj"))
-            .localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+            .transform(checkpoint)
         )
         nrm = w.agg(
             F.sqrt(F.sum((F.col("wj") * F.col("wj")).cast("decimal(28,12)"))

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import DISK as _CKPT_DISK
+from ..functions.ckpt import checkpoint
 from ..functions.splitwin import split_window
 from ..registry import query
 from ..tables import table
@@ -1664,7 +1664,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossJoin + left join).  The old form exploded the token stream
     # twice (totals + counts) and the grid's two consumers (stats, z)
     # re-derived both — up to four explode passes per run.  The
-    # source-cardinality profile lazily DISK-checkpoints so stats, z
+    # source-cardinality profile is checkpointed so stats, z
     # and the pair join all read one materialization.
     prof = (
         toks.groupBy("source").agg(
@@ -1672,7 +1672,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.count_if(F.col("tok") == w).alias(f"c{i}")
               for i, w in enumerate(_DELTA_WORDS)],
         )
-        .localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+        .transform(checkpoint)
     )
     grid = prof.select(
         "source",

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import DISK as _DISK
+from ..functions.ckpt import checkpoint
 from ..registry import query
 from ..tables import table
 
@@ -1347,7 +1347,7 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
           # the pair self-join consumes hourly TWICE; without a
           # checkpoint each side re-scans and re-aggregates the raw
           # events fact.  One spine-bounded materialization instead.
-          ).localCheckpoint(eager=False, storageLevel=_DISK)
+          ).transform(checkpoint)
     a = hourly.select("event_type", F.col("h").alias("ha"),
                       F.col("y").alias("ya"))
     b = hourly.select("event_type", F.col("h").alias("hb"),
@@ -1694,7 +1694,7 @@ def ts_forecast_baseline_wape(spark: SparkSession, sf_dir: str) -> DataFrame:
           .cast("decimal(28,6)").alias("y")
           # consumed twice by the lag self-join: one spine-bounded
           # materialization instead of two events-fact re-aggs.
-          ).localCheckpoint(eager=False, storageLevel=_DISK)
+          ).transform(checkpoint)
     a = hourly.select("event_type", "h", F.col("y").alias("actual"))
     f = hourly.select("event_type", (F.col("h") + _FC_LAG_H).alias("h"),
                       F.col("y").alias("forecast"))
@@ -2140,7 +2140,7 @@ def ts_peak_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
           # consumed by BOTH the per-type moment agg and the window
           # pass: one spine-bounded materialization instead of two
           # events-fact re-aggs.
-          ).localCheckpoint(eager=False, storageLevel=_DISK)
+          ).transform(checkpoint)
     mu = (F.sum(F.col("y").cast("decimal(28,6)")).cast("double")
           / F.count("*"))
     m2 = (F.sum((F.col("y") * F.col("y")).cast("decimal(38,6)"))
@@ -2318,7 +2318,7 @@ def ts_dominant_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_micros(F.date_trunc("hour", "ts").cast("timestamp"))
          / F.lit(3_600_000_000)).cast("long").alias("h"),
     ).agg(F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-          .alias("y")).localCheckpoint(eager=False, storageLevel=_DISK)
+          .alias("y")).transform(checkpoint)
     mom = hourly.groupBy("event_type").agg(
         (F.sum(F.col("y").cast("decimal(28,6)")).cast("double")
          / F.count("*")).alias("mu"))

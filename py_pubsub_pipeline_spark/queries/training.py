@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.ckpt import checkpoint
 from ..registry import query
 from ..tables import table
 
@@ -505,7 +506,6 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation as dedup_minhash_lsh (map-side combining, no x16
     explode). The md5 hash family keeps the oracle exactly
     reproducible."""
-    from ..functions.ckpt import DISK as _CKPT_DISK
     from .dedup import _shingles
 
     # wide=True parallelizes the 16-MIN md5 kernel above a single-split
@@ -519,7 +519,7 @@ def decontaminate_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"mh{i}")
             for i in range(_FUZZY_N_MH)
         ]
-    ).localCheckpoint(eager=False, storageLevel=_CKPT_DISK)
+    ).transform(checkpoint)
     is_eval = (
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         == _FUZZY_EVAL_GATE

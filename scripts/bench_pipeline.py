@@ -34,7 +34,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, ".")
+# import root derived from this file, not the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -25,8 +25,9 @@ import json
 import os
 import sys
 
-sys.path.insert(0, ".")
-sys.path.insert(0, "scripts")
+# import root derived from this file, not the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from py_pubsub_pipeline_spark.registry import load_all  # noqa: E402
 from parity import _ENVELOPE_BELOW  # noqa: E402

@@ -29,7 +29,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+# import root derived from this file, not the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py_pubsub_pipeline_spark.oracle import compare, duckdb_connect  # noqa: E402
 from py_pubsub_pipeline_spark.registry import load_all  # noqa: E402

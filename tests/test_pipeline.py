@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 
@@ -17,6 +18,7 @@ from py_pubsub_pipeline_spark.pipeline import (
     MorUpsertSink,
     SparkPipeline,
 )
+from py_pubsub_pipeline_spark.sources.pubsub import PubSubStreamSource, publish
 
 MSG = {"data": "someData", "nested": {"nestedData": "someNestedData"}}  # T:28-34
 
@@ -162,6 +164,53 @@ def test_metrics_listener_marks_failed_run_uncommitted(spark, tmp_path):
     assert pipe.metrics.terminated is not None
     assert pipe.metrics.terminated["committed"] is False
     assert "sink failure" in (pipe.metrics.terminated["exception"] or "")
+
+
+def test_metrics_listener_counts_only_its_own_query(spark, tmp_path):
+    """Two pipelines in one session: A runs continuously on a
+    40-message topic while B drains a 100-message topic. Each
+    listener reports only its own query's batches, and A's listener
+    leaves the session once A's query terminates."""
+    def listeners() -> int:
+        return len(spark._jsparkSession.streams().listListeners())
+
+    def pipeline(name, n, sink):
+        topic = str(tmp_path / name)
+        for i in range(n):
+            publish(topic, json.dumps({"i": i}).encode())
+        return SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic),
+            sink=sink,
+            processor=lambda m: m,
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+        )
+
+    before = listeners()
+    sink_a = CollectingSink()
+    a = pipeline("a", 40, sink_a)
+    b = pipeline("b", 100, CollectingSink())
+    query = a.process(available_now=False)
+    try:
+        deadline = time.time() + 120
+        while len(sink_a.rows) < 40 and time.time() < deadline:
+            time.sleep(0.05)
+        assert len(sink_a.rows) == 40
+        b.process()
+    finally:
+        query.stop()
+        a.killer.unwatch(query)
+    for _ in range(100):
+        if a.metrics.terminated is not None and listeners() == before:
+            break
+        time.sleep(0.1)
+
+    ta, tb = a.metrics.totals(), b.metrics.totals()
+    assert (ta["rows_in"], ta["rows_out"]) == (40, 40), a.metrics.batches
+    assert (tb["rows_in"], tb["rows_out"]) == (100, 100), b.metrics.batches
+    assert a.metrics.terminated["run_id"] == str(query.runId)
+    assert a.metrics.terminated["committed"] is True
+    assert listeners() == before
 
 
 def test_bulk_processor_one_call_per_batch(spark, tmp_path):
