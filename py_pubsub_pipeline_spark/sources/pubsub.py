@@ -1,4 +1,4 @@
-"""Pub/Sub-style streaming source + sink as a PySpark Python DataSource.
+"""Pub/Sub-style streaming source (a PySpark Python DataSource) and sink.
 
 Emulates the reference's transport (SURVEY.md §2A R1-R4, R9-R10) on a
 durable local 'broker': a topic is a directory, a message is an
@@ -15,18 +15,18 @@ reference keeps in Pub/Sub (ack_id, P:42-47):
                             stack hazard gone)
 - R4 retry/backoff       -> IOErrors surface to Spark's task retry +
                             restart-from-checkpoint machinery
-- R9 publish             -> DataSourceStreamWriter: stage rows per
-                            task, atomic rename at commit(batchId)
+- R9 publish             -> TopicSink, a foreachBatch sink: stage the
+                            batch, claim each message's seq with link()
 - R10 ack-after-publish  -> Spark commits the batch to the checkpoint
-                            only after commit() returns; abort() leaves
-                            nothing visible. Published-then-crashed
-                            batches re-publish on restart => the same
-                            at-least-once duplicate window as the
-                            reference (P:48-52), stated in README.
+                            only after the sink returns, and the sink
+                            keys each batch by (query, batch id), so a
+                            replay publishes nothing twice: exactly-once
+                            where the reference is at-least-once
+                            (P:48-52).
 
 In production the same class shape points at real Pub/Sub: read(start)
-becomes subscriber.pull(max_messages=bulk_limit) and commit() the
-publisher flush; this file keeps the transport local so the entire
+becomes subscriber.pull(max_messages=bulk_limit) and the sink's claim
+the publisher flush; this file keeps the transport local so the entire
 delivery contract is testable hermetically (SURVEY.md §5.1's mock
 strategy, minus the mocks).
 """
@@ -34,16 +34,15 @@ strategy, minus the mocks).
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
-from dataclasses import dataclass
+from pathlib import Path
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamWriter,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
@@ -61,21 +60,24 @@ def _msg_name(seq: int) -> str:
     return f"{seq:0{_SEQ_WIDTH}d}.msg"
 
 
-def _next_seq(topic_dir: str) -> int:
-    existing = [
-        int(f[:_SEQ_WIDTH]) for f in os.listdir(topic_dir) if f.endswith(".msg")
-    ]
-    return max(existing, default=-1) + 1
+def _head(topic_dir: str) -> int:
+    """One past the highest published seq: the next offset to claim, and
+    the end of what a reader can see. 0 for a topic not created yet."""
+    try:
+        names = os.listdir(topic_dir)
+    except FileNotFoundError:
+        return 0
+    return max(
+        (int(f[:_SEQ_WIDTH]) for f in names if f.endswith(".msg")), default=-1
+    ) + 1
 
 
 def _claim_seq(topic_dir: str, staged_path: str, seq_hint: int) -> int:
     """Atomically claim the next free sequence number for staged_path.
 
     os.link() to the final name fails with EEXIST if another publisher
-    claimed that seq — we retry with the next one. The old
-    max+1-then-rename scheme let two concurrent publishers pick the
-    same seq and rename() silently OVERWROTE the loser's message on
-    the 'durable' broker; link() never clobbers.
+    claimed that seq — we retry with the next one. Unlike rename(),
+    link() never overwrites a concurrent publisher's message.
     """
     seq = seq_hint
     while True:
@@ -98,7 +100,56 @@ def publish(topic_dir: str, payload: bytes) -> int:
     tmp = os.path.join(topic_dir, f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "wb") as f:
         f.write(payload)
-    return _claim_seq(topic_dir, tmp, _next_seq(topic_dir))
+    return _claim_seq(topic_dir, tmp, _head(topic_dir))
+
+
+class TopicSink:
+    """foreachBatch sink: publishes each batch's `value` column into a
+    topic, exactly once per (query, batch).
+
+    `.sink-<query id>` under the topic records the last batch id the
+    query published. The query id lives in the checkpoint and Spark
+    replays only batches after its last commit, so a replayed batch at
+    or below the record is a no-op. `.sink-<query id>-<batch id>/` holds
+    the batch's payloads while they are claimed; it appears by rename,
+    so a replay after a crash mid-claim resumes it instead of running
+    the batch again. One `collect()` per batch: the processor runs once
+    per message.
+    """
+
+    def __init__(self, topic_dir: str):
+        self.topic_dir = topic_dir
+
+    def __call__(self, batch_df, epoch_id: int) -> None:  # noqa: ANN001
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        if query_id is None:
+            raise RuntimeError("TopicSink runs as a streaming foreachBatch sink")
+        record = os.path.join(self.topic_dir, f".sink-{query_id}")
+        stage = f"{record}-{epoch_id}"
+        # The record is only ever replaced, never removed.
+        if os.path.exists(record) and epoch_id <= int(Path(record).read_text()):
+            shutil.rmtree(stage, ignore_errors=True)
+            return
+        if not os.path.isdir(stage):
+            rows = batch_df.select("value").collect()
+            tmp = os.path.join(self.topic_dir, f".tmp-{uuid.uuid4().hex}")
+            os.makedirs(tmp)
+            for i, row in enumerate(rows):
+                Path(tmp, f"{i:0{_SEQ_WIDTH}d}").write_bytes(bytes(row.value))
+            os.rename(tmp, stage)
+        seq = _head(self.topic_dir)
+        for name in sorted(os.listdir(stage)):
+            path = os.path.join(stage, name)
+            if os.stat(path).st_nlink > 1:
+                os.remove(path)  # linked into the topic before a crash
+            else:
+                seq = _claim_seq(self.topic_dir, path, seq) + 1
+        tmp = os.path.join(self.topic_dir, f".tmp-{uuid.uuid4().hex}")
+        Path(tmp).write_text(str(epoch_id))
+        os.replace(tmp, record)
+        os.rmdir(stage)
 
 
 def _read_range(topic_dir: str, start: int, end: int) -> Iterator[tuple]:
@@ -140,18 +191,11 @@ class PubSubDirStreamReader(SimpleDataSourceStreamReader):
         return {"seq": 0}
 
     def _latest_seq(self) -> int:
-        if not os.path.isdir(self.topic_dir):
-            return 0
         marker = os.path.join(self.topic_dir, FAULT_MARKER)
         if os.path.exists(marker):
             os.remove(marker)  # one-shot: consumed on first poll
             raise IOError("injected broker fault (test client marker)")
-        seqs = [
-            int(f[:_SEQ_WIDTH])
-            for f in os.listdir(self.topic_dir)
-            if f.endswith(".msg")
-        ]
-        return max(seqs, default=-1) + 1
+        return _head(self.topic_dir)
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         import time
@@ -175,46 +219,6 @@ class PubSubDirStreamReader(SimpleDataSourceStreamReader):
         return _read_range(self.topic_dir, start["seq"], end["seq"])
 
 
-@dataclass
-class _Staged(WriterCommitMessage):
-    files: tuple[str, ...] = ()
-
-
-class PubSubDirStreamWriter(DataSourceStreamWriter):
-    def __init__(self, options: dict):
-        self.topic_dir = options["path"]
-        self.stage_dir = os.path.join(self.topic_dir, ".staging")
-
-    def write(self, iterator: Iterator) -> _Staged:
-        os.makedirs(self.stage_dir, exist_ok=True)
-        staged = []
-        for row in iterator:
-            p = os.path.join(self.stage_dir, uuid.uuid4().hex)
-            with open(p, "wb") as f:
-                f.write(bytes(row.value))
-            staged.append(p)
-        return _Staged(files=tuple(staged))
-
-    def commit(self, messages: list[_Staged], batch_id: int) -> None:
-        # Publish-before-ack: this runs before Spark writes the batch
-        # commit to the checkpoint (R10 ordering).
-        os.makedirs(self.topic_dir, exist_ok=True)
-        seq = _next_seq(self.topic_dir)
-        for m in messages:
-            for path in m.files:
-                # Atomic claim: never overwrites a concurrent external
-                # publish racing this commit (see _claim_seq).
-                seq = _claim_seq(self.topic_dir, path, seq) + 1
-
-    def abort(self, messages: list[_Staged], batch_id: int) -> None:
-        for m in messages:
-            for path in m.files:
-                try:
-                    os.remove(path)
-                except OSError:
-                    pass
-
-
 class PubSubDirBatchReader(DataSourceReader):
     """Batch BACKFILL/REPLAY path: read a topic's full durable history
     (or an offset range) as a bounded DataFrame — the ops story for
@@ -229,15 +233,7 @@ class PubSubDirBatchReader(DataSourceReader):
         self.topic_dir = options["path"]
         self.start = int(options.get("start_offset", 0))
         end = options.get("end_offset")
-        if end is not None:
-            self.end = int(end)
-        else:
-            seqs = [
-                int(f[:_SEQ_WIDTH])
-                for f in os.listdir(self.topic_dir)
-                if f.endswith(".msg")
-            ] if os.path.isdir(self.topic_dir) else []
-            self.end = max(seqs, default=-1) + 1
+        self.end = int(end) if end is not None else _head(self.topic_dir)
 
     def partitions(self):  # noqa: ANN201
         from pyspark.sql.datasource import InputPartition
@@ -259,8 +255,8 @@ class PubSubDirBatchReader(DataSourceReader):
 
 class PubSubDirDataSource(DataSource):
     """spark.readStream.format("pubsub_dir").option("path", topic)
-    / df.writeStream.format("pubsub_dir").option("path", topic)
     / spark.read.format("pubsub_dir").option("path", topic)  (backfill).
+    Read only: a pipeline publishes into a topic through TopicSink.
 
     Register once per session:
         spark.dataSource.register(PubSubDirDataSource)
@@ -278,9 +274,6 @@ class PubSubDirDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> PubSubDirStreamReader:
         return PubSubDirStreamReader(self.options)
-
-    def streamWriter(self, schema: StructType, overwrite: bool) -> PubSubDirStreamWriter:
-        return PubSubDirStreamWriter(self.options)
 
 
 class PubSubClientStreamReader(SimpleDataSourceStreamReader):

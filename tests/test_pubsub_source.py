@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -19,6 +21,7 @@ from py_pubsub_pipeline_spark.sources.pubsub import (
     FAULT_MARKER,
     PubSubDirStreamReader,
     PubSubStreamSource,
+    TopicSink,
     publish,
 )
 
@@ -62,23 +65,19 @@ def test_bulk_limit_caps_batches(spark, tmp_path):
 
 
 def test_end_to_end_topic_to_topic(spark, tmp_path):
-    """Full loop: in-topic -> pipeline -> out-topic via the custom
-    stream writer (publish-at-commit), then a second read confirms."""
+    """Full loop: in-topic -> pipeline -> out-topic through TopicSink,
+    then a read of the out-topic's files confirms."""
     topic_in = str(tmp_path / "tin")
     topic_out = str(tmp_path / "tout")
     for i in range(3):
         publish(topic_in, json.dumps({"i": i}).encode())
 
-    src = PubSubStreamSource(topic_in)
-    df = src.read_stream(spark)
-    q = (
-        df.writeStream.format("pubsub_dir")
-        .option("path", topic_out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    SparkPipeline(
+        spark=spark,
+        source=PubSubStreamSource(topic_in),
+        sink=TopicSink(topic_out),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    ).process()
 
     msgs = sorted(f for f in os.listdir(topic_out) if f.endswith(".msg"))
     assert len(msgs) == 3
@@ -198,14 +197,21 @@ def test_checkpoint_logs_are_checksummed(spark, tmp_path):
         pipe().process()
 
 
-@pytest.mark.parametrize("dlq", [False, True])
-def test_stop_during_sink_then_restart_loses_nothing(spark, tmp_path, dlq):
+@pytest.mark.parametrize(
+    "dlq,topic_sink",
+    [(False, False), (True, False), (False, True)],
+    ids=["False", "True", "topic_sink"],
+)
+def test_stop_during_sink_then_restart_loses_nothing(
+    spark, tmp_path, dlq, topic_sink
+):
     """Fault matrix: stop() lands after the foreachBatch sink published
     its batch but before it returned. A stop is not a failure: the
     query and the listener's terminated record carry no exception.
     Whether the stopped batch's commit lands depends on where the
     interrupt hits the stream thread, so a restart on the same
-    checkpoint re-delivers at most that one batch and loses nothing."""
+    checkpoint re-delivers at most that one batch and loses nothing.
+    TopicSink recognises that replay by its batch id: exactly once."""
     topic, out = str(tmp_path / "in"), str(tmp_path / "out")
     for i in range(6):
         publish(topic, json.dumps({"i": i}).encode())
@@ -213,11 +219,16 @@ def test_stop_during_sink_then_restart_loses_nothing(spark, tmp_path, dlq):
     first: list[int] = []
 
     def publishing_sink(batch_df, epoch_id):
-        rows = batch_df.collect()
-        for r in rows:
-            publish(out, bytes(r.value))
+        if topic_sink:
+            TopicSink(out)(batch_df, epoch_id)
+            ids = _topic_ids(out)
+        else:
+            rows = batch_df.collect()
+            for r in rows:
+                publish(out, bytes(r.value))
+            ids = [json.loads(bytes(r.value))["i"] for r in rows]
         if not published.is_set():
-            first.extend(json.loads(bytes(r.value))["i"] for r in rows)
+            first.extend(ids)
             published.set()
             stopping.wait(60)
             time.sleep(1.0)  # stop() is now waiting on this callback
@@ -259,9 +270,134 @@ def test_stop_during_sink_then_restart_loses_nothing(spark, tmp_path, dlq):
 
     pipe().process()
     got = _topic_ids(out)
+    if topic_sink:
+        assert Counter(got) == Counter(range(6)), got
+        return
     assert sorted(set(got)) == list(range(6)), "restart must lose nothing"
     extra = Counter(got) - Counter(range(6))
     assert set(extra) <= set(first) and max(extra.values(), default=1) == 1, got
+
+
+def test_topic_sink_replay_after_lost_offset_commit_is_exactly_once(
+    spark, tmp_path
+):
+    """Fault matrix: a kill between the sink's commit and Spark's
+    commit-log write, made by deleting the last commits/<n> and its
+    .crc. The restart runs batch n again; TopicSink has already
+    recorded it for this query, so every message is in the out-topic
+    exactly once."""
+    topic, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), tmp_path / "ck"
+    for i in range(10):
+        publish(topic, json.dumps({"i": i}).encode())
+
+    def pipe():
+        return SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic, bulk_limit=2),
+            sink=TopicSink(out),
+            checkpoint_dir=str(ckpt),
+        )
+
+    pipe().process()
+    last = max(int(n) for n in os.listdir(ckpt / "commits") if n.isdigit())
+    assert last >= 4
+    os.remove(ckpt / "commits" / str(last))
+    os.remove(ckpt / "commits" / f".{last}.crc")
+
+    pipe().process()
+    assert (ckpt / "commits" / str(last)).exists(), "batch was not replayed"
+    assert Counter(_topic_ids(out)) == Counter(range(10))
+
+
+@pytest.mark.parametrize("linked", [False, True], ids=["before_link", "after_link"])
+def test_topic_sink_crash_mid_commit_then_restart_is_exactly_once(
+    spark, tmp_path, monkeypatch, linked
+):
+    """Fault matrix: the sink dies after one claim of its second batch,
+    either before the next message's link() or after it but before the
+    staged file is removed. process() fails; a restart on the same
+    checkpoint resumes the staged batch, so each message lands once
+    and each batch keeps its order."""
+    from py_pubsub_pipeline_spark.sources import pubsub
+
+    topic, out = str(tmp_path / "in"), str(tmp_path / "out")
+    for i in range(6):
+        publish(topic, json.dumps({"i": i}).encode())
+    real, claims = pubsub._claim_seq, []
+
+    def crashing_claim(topic_dir, staged, hint):
+        if len(claims) == 3 + 1:  # all of batch 0, one of batch 1
+            if linked:
+                name = pubsub._msg_name(pubsub._head(topic_dir))
+                os.link(staged, os.path.join(topic_dir, name))
+            raise OSError("crash mid-commit (injected)")
+        claims.append(real(topic_dir, staged, hint))
+        return claims[-1]
+
+    def pipe():
+        return SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic, bulk_limit=3),
+            sink=TopicSink(out),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+
+    monkeypatch.setattr(pubsub, "_claim_seq", crashing_claim)
+    with pytest.raises(Exception, match="crash mid-commit"):
+        pipe().process()
+    assert _topic_ids(out) == list(range(5 if linked else 4))
+
+    monkeypatch.undo()
+    pipe().process()
+    assert _topic_ids(out) == list(range(6))
+
+
+def test_topic_sink_with_concurrent_publishers_no_gap_no_clobber(spark, tmp_path):
+    """Fault matrix: 4 threads each publish() 100 messages into the
+    topic a pipeline's TopicSink commits into. Every seq is claimed
+    with link(), so the topic's offsets run 0..N-1 with no gap and
+    every payload is there exactly once."""
+    topic, out = str(tmp_path / "in"), str(tmp_path / "out")
+    ours = [json.dumps({"i": i}).encode() for i in range(40)]
+    for payload in ours:
+        publish(topic, payload)
+    theirs = [
+        json.dumps({"t": t, "i": i}).encode() for t in range(4) for i in range(100)
+    ]
+    started = threading.Event()
+    sink = TopicSink(out)
+
+    def sink_fn(batch_df, epoch_id):
+        started.set()
+        sink(batch_df, epoch_id)
+
+    def publisher(t):
+        started.wait(120)
+        for payload in theirs[t * 100:(t + 1) * 100]:
+            publish(out, payload)
+            time.sleep(0.01)
+
+    threads = [threading.Thread(target=publisher, args=(t,)) for t in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        for th in threads:
+            th.start()
+        SparkPipeline(
+            spark=spark,
+            source=PubSubStreamSource(topic, bulk_limit=5),
+            sink=sink_fn,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        ).process()
+        for th in threads:
+            th.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+
+    names = sorted(f for f in os.listdir(out) if f.endswith(".msg"))
+    assert [int(n[: -len(".msg")]) for n in names] == list(range(440))
+    assert Counter(Path(out, n).read_bytes() for n in names) == Counter(ours + theirs)
 
 
 def test_batch_backfill_reads_topic_history(spark, tmp_path):
@@ -430,16 +566,18 @@ def test_client_reader_redelivery_after_deadline_is_at_least_once():
     assert fake.acked == [], "duplicate window exists until an ack lands"
 
 
-def test_two_stage_chained_pipelines(spark, tmp_path):
+@pytest.mark.parametrize("middle", ["directory", "topic"])
+def test_two_stage_chained_pipelines(spark, tmp_path, middle):
     """The reference's primary deployment shape (RM:1-4: enrichment
     pipelines between pub/sub queues) is SERVICES CHAINED
     topic-to-topic: stage 1's outgoing topic is stage 2's incoming
     subscription. Two complete SparkPipelines with independent
-    checkpoints compose through a shared middle topic directory; each
-    stage's offsets commit only after ITS publish (per-stage
-    ack-after-publish), so a crash between stages replays only the
-    unacked stage. Asserts both enrichments land, in order, and both
-    stages committed."""
+    checkpoints compose through a shared middle transport: a
+    TopicSink -> PubSubStreamSource topic, or a DirectorySink ->
+    FileStreamSource directory. Each stage's offsets commit only after
+    ITS publish (per-stage ack-after-publish), so a crash between
+    stages replays only the unacked stage. Asserts both enrichments
+    land, in order, and both stages committed."""
     t_in = str(tmp_path / "t0")
     t_mid = str(tmp_path / "t1")
     for i in range(4):
@@ -452,10 +590,15 @@ def test_two_stage_chained_pipelines(spark, tmp_path):
         SparkPipeline,
     )
 
+    if middle == "topic":
+        sink1, source2 = TopicSink(t_mid), PubSubStreamSource(t_mid)
+    else:
+        sink1, source2 = DirectorySink(t_mid), FileStreamSource(t_mid)
+
     SparkPipeline(
         spark=spark,
         source=PubSubStreamSource(t_in),
-        sink=DirectorySink(t_mid),
+        sink=sink1,
         processor=lambda m: {**m, "stage1": m["i"] * 10},
         checkpoint_dir=str(tmp_path / "ckpt1"),
     ).process()
@@ -463,7 +606,7 @@ def test_two_stage_chained_pipelines(spark, tmp_path):
     sink2 = CollectingSink()
     SparkPipeline(
         spark=spark,
-        source=FileStreamSource(t_mid),
+        source=source2,
         sink=sink2,
         processor=lambda m: {**m, "stage2": m["stage1"] + 1},
         checkpoint_dir=str(tmp_path / "ckpt2"),
