@@ -7,9 +7,10 @@ against the STANDING corpus (the dedup_incremental shape,
 queries/dedup.py) without re-reading it.  This module wires that
 admission path behind the reference-parity streaming pipeline
 (pipeline.SparkPipeline: R1 source pull, R2 bulk_limit, R10
-ack-after-publish, R12 bounded drain), with per-batch idempotent
-output in the IdempotentParquetSink's batch-keyed-overwrite discipline
-so a crashed-and-restarted stream CONVERGES to the batch DAG's output
+ack-after-publish, R12 bounded drain), with every output and state
+kind kept as an IdempotentParquetSink log (pipeline.py, the owner of
+the batch-partition layout and its commit rule), so a
+crashed-and-restarted stream CONVERGES to the batch DAG's output
 instead of duplicating (the replay contract the R10 tests pin).
 
 Stage sharing: every gate is ONE function over a documents DataFrame,
@@ -32,8 +33,8 @@ structural, not coincidental.  Gates:
      broadcast to every batch — the frozen-quality-model posture.
   4. (near_dup=True) incremental NEAR-dup admission — the actual
      dedup_incremental shape: the batch's word-3-gram shingles join
-     one-sidedly against the STANDING postings state
-     (``shingles/batch=N``, same batch-keyed discipline); a candidate
+     one-sidedly against the STANDING postings state (the
+     ``shingles`` log); a candidate
      with milli-Jaccard >= ND_TAU_MILLI against any previously
      admitted doc is rejected, and the verdict (worst collision +
      score) lands in the ``nd_rejects`` ledger.  New x new pairs are
@@ -53,20 +54,19 @@ structural, not coincidental.  Gates:
      land in the ``sem_rejects`` ledger.
 
 State discipline (the part a 1000-executor deployment cares about):
-the standing dedup state is parquet, PARTITIONED BY THE BATCH ID THAT
-ADMITTED IT (``state/batch=N/``).  Batch N reads only partitions
-``< N`` and overwrites its own partition — so a replayed batch (sink
-succeeded, offset commit lost: the at-least-once window) recomputes
-the SAME admission decision and overwrites the same files, and a
-crash between the state write and the commit cannot poison later
-batches (their reads exclude ``>= their own id`` never, but do
-exclude the failed batch's leftovers when IT replays).  At 100 TB the
+the standing dedup state is the ``state`` log, PARTITIONED BY THE
+BATCH ID THAT ADMITTED IT.  Batch N reads only the log as seen before
+N (IdempotentParquetSink.standing) and overwrites its own partition —
+so a replayed batch (sink succeeded, offset commit lost: the
+at-least-once window) recomputes the SAME admission decision and
+overwrites the same files, and its read excludes its own leftovers
+from the failed attempt.  At 100 TB the
 state table is the corpus's (norm_hash, doc_id) projection — bucket
 it by hash so the per-batch anti-join is a bucketed semi-join, not a
 broadcast (same plan note as dedup_incremental's persisted inverted
 index).
 
-The per-batch mix report (``mix/batch=N``) emits the running
+The per-batch mix report (the ``mix`` log) emits the running
 temperature-flattened source weights (mix_temperature_sampling's
 alpha=0.5 integer formula) over everything admitted through batch N —
 the mixing dashboard a curation stream feeds the trainer.
@@ -95,11 +95,26 @@ from .queries.training import (  # noqa: E402
 )
 
 from .queries.dedup import _grams as _shingle_grams  # noqa: E402
+from .pipeline import (  # noqa: E402
+    FileStreamSource,
+    IdempotentParquetSink,
+    SparkPipeline,
+)
 
 DOC_SCHEMA = "doc_id LONG, lang STRING, source STRING, text STRING"
 # Near-dup admission threshold: milli-Jaccard over distinct word-3-gram
 # shingles (the dedup_incremental kernel, queries/dedup.py).
 ND_TAU_MILLI = 500
+
+
+def _write_marker(path: str, text: str) -> None:
+    """Replace the one-line marker file ``path`` atomically (tmp +
+    rename): a reader sees the old value or the new one, never a
+    torn write."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text + "\n")
+    os.replace(tmp, path)
 
 
 def _shingle_rows(docs: DataFrame) -> DataFrame:
@@ -403,20 +418,26 @@ def doremi_report(admitted: DataFrame) -> DataFrame:
 class CurationAdmissionSink:
     """foreachBatch sink implementing the incremental admission path.
 
-    Layout under ``path``:
-      out/batch=N/          admitted documents of batch N  (overwrite)
-      state/batch=N/        (norm_hash, doc_id) admitted in batch N
-      mix_state/batch=N/    RUNNING per-source token sums through N
-      doremi_state/batch=N/ RUNNING DoReMi partials through N
-      mix/batch=N/          mix weights released off mix_state
-      doremi/batch=N/       DoReMi reweight released off doremi_state
+    Layout under ``path``: one IdempotentParquetSink log per kind
+    (``logs[kind]``), which owns the ``batch=N`` / ``base=B`` layout,
+    the ``_SUCCESS`` commit rule, the base-plus-deltas read and vacuum:
+      out/           admitted documents of batch N
+      state/         (norm_hash, doc_id) admitted in batch N
+      shingles/      near-dup shingle postings admitted in batch N
+      sem/           semantic-stage candidate frames of batch N
+      nd_rejects/    near-dup verdicts of batch N
+      sem_rejects/   semantic verdicts of batch N
+      mix_state/     RUNNING per-source token sums through N
+      doremi_state/  RUNNING DoReMi partials through N
+      mix/           mix weights released off mix_state
+      doremi/        DoReMi reweight released off doremi_state
+      state_evicted/ base=B: exact-dedup keys a TTL fold at B evicted
 
-    Every write is keyed by the engine-stable batch id and uses
-    overwrite mode, so a replayed batch is a no-op rewrite — the
-    IdempotentParquetSink discipline extended to state.  The two
-    reweight states carry running sums forward (each partition
-    supersedes all earlier ones), so a trigger's release stage reads
-    ONE O(sources)-row partition regardless of corpus or stream age.
+    Every write is keyed by the engine-stable batch id, so a replayed
+    batch is a no-op rewrite.  The two reweight states carry running
+    sums forward (each partition supersedes all earlier ones), so a
+    trigger's release stage reads ONE O(sources)-row partition
+    regardless of corpus or stream age.
     """
 
     path: str
@@ -455,9 +476,13 @@ class CurationAdmissionSink:
     # under compact_state; the reweight states are already O(sources)
     # running sums per partition and need only vacuum.
     _STANDING_KINDS = ("state", "shingles", "sem")
+    _KINDS = ("out", "state", "shingles", "sem", "nd_rejects",
+              "sem_rejects", "mix_state", "doremi_state", "mix", "doremi",
+              "state_evicted")
 
-    def _dir(self, kind: str) -> str:
-        return os.path.join(self.path, kind)
+    def __post_init__(self) -> None:
+        self.logs = {k: IdempotentParquetSink(os.path.join(self.path, k))
+                     for k in self._KINDS}
 
     def _assert_state_format(self) -> None:
         marker = os.path.join(self.path, "_STATE_FORMAT")
@@ -468,10 +493,7 @@ class CurationAdmissionSink:
                 # v2 -> v3 is additive (bases + width marker only; the
                 # running-sum folding semantics are identical), so the
                 # marker upgrades in place instead of refusing
-                tmp = marker + ".tmp"
-                with open(tmp, "w") as fh:
-                    fh.write(self.STATE_FORMAT + "\n")
-                os.replace(tmp, marker)
+                _write_marker(marker, self.STATE_FORMAT)
                 return
             if have != self.STATE_FORMAT:
                 raise RuntimeError(
@@ -481,7 +503,7 @@ class CurationAdmissionSink:
                     f"state, do not mix layouts")
             return
         for kind in ("doremi_state", "mix_state"):
-            d = self._dir(kind)
+            d = self.logs[kind].path
             if os.path.isdir(d) and any(
                 n.startswith("batch=") for n in os.listdir(d)
             ):
@@ -493,73 +515,17 @@ class CurationAdmissionSink:
                     f"partitions into one running partition) or "
                     f"restart the state")
         os.makedirs(self.path, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(self.STATE_FORMAT + "\n")
-        os.replace(tmp, marker)
+        _write_marker(marker, self.STATE_FORMAT)
 
-    def _committed_ids(self, kind: str, prefix: str) -> list[int]:
-        base = self._dir(kind)
-        if not os.path.isdir(base):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(base)
-            if d.startswith(prefix + "=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        )
-
-    def _standing_df(
-        self, spark: SparkSession, kind: str, before_batch: int,
-        with_provenance: bool = False,
-    ) -> DataFrame | None:
-        """The standing state of ``kind`` as seen by batch
-        ``before_batch``: the newest compaction base covering only
-        earlier batches (``base={B}`` folds every batch id <= B,
-        usable iff B < before_batch — a replayed batch must not see
-        its own failed leftovers, folded or not), unioned with the
-        batch partitions after it.  None when nothing is committed.
-        Post-compaction this reads O(deltas since the fold) files
-        instead of one per trigger since stream birth.
-
-        ``with_provenance`` keeps the ADMITTING batch id as a
-        ``src_batch`` column (delta rows take it from their partition
-        id; base rows carry it — every base write preserves it) — the
-        column TTL eviction ages on, across any number of
-        compactions."""
-        root = self._dir(kind)
-        bases = [b for b in self._committed_ids(kind, "base")
-                 if b < before_batch]
-        b = max(bases) if bases else None
-        out = None
-        if b is not None:
-            out = spark.read.parquet(os.path.join(root, f"base={b}"))
-            if "src_batch" not in out.columns:
-                out = out.withColumn(
-                    "src_batch", F.lit(b).cast("long"))
-        parts = [
-            os.path.join(root, f"batch={i}")
-            for i in self._committed_ids(kind, "batch")
-            if i < before_batch and (b is None or i > b)
-        ]
-        if parts:
-            d = (
-                spark.read.option("basePath", root).parquet(*parts)
-                .withColumn("src_batch", F.col("batch").cast("long"))
-                .drop("batch")
-            )
-            out = d if out is None else out.unionByName(d)
-        if out is not None and not with_provenance:
-            out = out.drop("src_batch")
-        return out
-
-    def _standing(self, spark: SparkSession, before_batch: int) -> DataFrame:
-        """Union of exact-dedup state admitted by batches
-        < before_batch (base-aware, see _standing_df)."""
-        df = self._standing_df(spark, "state", before_batch)
-        if df is None:
-            return spark.createDataFrame([], "norm_hash STRING, doc_id LONG")
-        return df.select("norm_hash", "doc_id")
+    def _standing(self, spark: SparkSession, kind: str,
+                  before_batch: int) -> DataFrame | None:
+        """The standing state of ``kind`` as batch ``before_batch``
+        sees it (the log's newest base below it plus the deltas after
+        that base), keeping the ADMITTING batch id as ``src_batch`` —
+        every base write preserves it, so TTL eviction ages on it
+        across any number of compactions."""
+        return self.logs[kind].standing(spark, before_batch,
+                                        provenance="src_batch")
 
     def _sem_bits(self) -> int:
         """The CURRENT semantic blocking width — SEM_ND_BITS until a
@@ -571,13 +537,6 @@ class CurationAdmissionSink:
             with open(marker) as fh:
                 return int(fh.read().strip())
         return SEM_ND_BITS
-
-    def _write_sem_bits(self, bits: int) -> None:
-        marker = os.path.join(self.path, "_SEM_BITS")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(f"{int(bits)}\n")
-        os.replace(tmp, marker)
 
     def compact_state(
         self, spark: SparkSession, through: int | None = None,
@@ -619,8 +578,9 @@ class CurationAdmissionSink:
         ignored by the standing readers (covered by the base)."""
         folded: dict[str, str] = {}
         for kind in self._STANDING_KINDS:
-            batches = self._committed_ids(kind, "batch")
-            bases = self._committed_ids(kind, "base")
+            log = self.logs[kind]
+            batches = log.committed()
+            bases = log.committed("base")
             if through is not None:
                 t = through
             elif len(batches) > 1:
@@ -633,12 +593,11 @@ class CurationAdmissionSink:
                 continue
             t = int(t)
             if t in bases:
-                # deterministic content, _SUCCESS is the commit point:
+                # deterministic content, already committed:
                 # replaying the compaction is a no-op
                 folded[kind] = f"base={t}"
                 continue
-            df = self._standing_df(spark, kind, before_batch=t + 1,
-                                   with_provenance=True)
+            df = self._standing(spark, kind, t + 1)
             if df is None:
                 continue
             if ttl_batches is not None:
@@ -658,10 +617,8 @@ class CurationAdmissionSink:
                 # admission index.
                 cutoff = t - int(ttl_batches)
                 if kind == "state":
-                    df.filter(F.col("src_batch") <= cutoff).write.mode(
-                        "overwrite"
-                    ).parquet(os.path.join(
-                        self._dir("state_evicted"), f"base={t}"))
+                    self.logs["state_evicted"].write(
+                        df.filter(F.col("src_batch") <= cutoff), t, "base")
                 df = df.filter(F.col("src_batch") > cutoff)
             if kind == "sem":
                 bits = sem_bits if sem_bits is not None else (
@@ -671,34 +628,22 @@ class CurationAdmissionSink:
                     _sem_bucket("emb", bits).alias("bkt"), "emb",
                     "src_batch",
                 ).repartition("bkt")
-            df.write.mode("overwrite").parquet(
-                os.path.join(self._dir(kind), f"base={t}"))
+            log.write(df, t, "base")
             folded[kind] = f"base={t}"
             if kind == "sem":
-                self._write_sem_bits(bits)
+                _write_marker(os.path.join(self.path, "_SEM_BITS"),
+                              str(int(bits)))
         return folded
 
     def read_evicted(self, spark: SparkSession) -> DataFrame:
         """The auditable eviction ledger: every exact-dedup key TTL'd
         out of the admission index, with its admitting batch and the
         compaction horizon that expired it."""
-        base = self._dir("state_evicted")
-        parts = [
-            os.path.join(base, d)
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("base=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not parts:
-            return spark.createDataFrame(
-                [], "norm_hash STRING, doc_id LONG, src_batch LONG,"
-                    " horizon LONG")
-        return (
-            spark.read.option("basePath", base).parquet(*parts)
-            .withColumnRenamed("base", "horizon")
-            .select("norm_hash", "doc_id", "src_batch",
-                    F.col("horizon").cast("long"))
-        )
+        return self.logs["state_evicted"].read(
+            spark, prefix="base", provenance="horizon",
+            empty="norm_hash STRING, doc_id LONG, src_batch LONG,"
+                  " horizon LONG",
+        ).select("norm_hash", "doc_id", "src_batch", "horizon")
 
     def vacuum_state(self) -> list[str]:
         """Expire standing-state partitions superseded by each kind's
@@ -708,30 +653,17 @@ class CurationAdmissionSink:
         as ``kind/name`` strings.  Replay-safe: a replayed folded
         batch recreates a dir the readers ignore; the next vacuum
         removes it again."""
-        import shutil
-
         removed = []
         for kind in self._STANDING_KINDS:
-            bases = self._committed_ids(kind, "base")
-            if not bases:
-                continue
-            newest = max(bases)
-            dead = [f"batch={i}"
-                    for i in self._committed_ids(kind, "batch")
-                    if i <= newest]
-            dead += [f"base={b}" for b in bases if b < newest]
-            for rel in dead:
-                shutil.rmtree(os.path.join(self._dir(kind), rel))
-                removed.append(f"{kind}/{rel}")
+            removed += [f"{kind}/{rel}" for rel in self.logs[kind].vacuum()]
         for kind in ("mix_state", "doremi_state"):
-            parts = self._committed_ids(kind, "batch")
+            parts = self.logs[kind].committed()
             # keep the newest TWO: a replay of the newest batch folds
             # against the partition before it (_fold_state reads the
             # latest partition strictly below the replayed id)
-            for i in parts[:-2]:
-                shutil.rmtree(
-                    os.path.join(self._dir(kind), f"batch={i}"))
-                removed.append(f"{kind}/batch={i}")
+            if len(parts) > 2:
+                removed += [f"{kind}/{rel}" for rel in
+                            self.logs[kind].vacuum(through=parts[-3])]
         return removed
 
     def _near_dup_rejects(
@@ -743,7 +675,7 @@ class CurationAdmissionSink:
         job — queries/dedup.py:1185's contract).  Emits, per rejected
         candidate, the worst standing collision and its milli-Jaccard
         — the same verdict row dedup_incremental produces."""
-        standing = self._standing_df(spark, "shingles", before_batch)
+        standing = self._standing(spark, "shingles", before_batch)
         empty = spark.createDataFrame(
             [], "doc_id LONG, corp_id LONG, jacc_milli LONG")
         if standing is None:
@@ -790,7 +722,7 @@ class CurationAdmissionSink:
         across a compaction-time width change — the stored bkt column
         is a clustering/layout hint only.  Emits the worst collision
         per rejected doc — the sem_rejects ledger."""
-        standing = self._standing_df(spark, "sem", before_batch)
+        standing = self._standing(spark, "sem", before_batch)
         lo_frames = [
             frame.select(
                 F.col("doc_id").alias("corp_id"),
@@ -843,10 +775,11 @@ class CurationAdmissionSink:
         # the source (and inflates the source's rows-in metric).
         docs.persist()
         verdicts = gate_batch(docs, self.eval_grams)
-        standing = self._standing(spark, int(epoch_id))
-        admitted = _admit_in_frame(verdicts).join(
-            standing.select("norm_hash"), "norm_hash", "left_anti"
-        )
+        admitted = _admit_in_frame(verdicts)
+        standing = self._standing(spark, "state", int(epoch_id))
+        if standing is not None:
+            admitted = admitted.join(
+                standing.select("norm_hash"), "norm_hash", "left_anti")
         rejects = None
         cand = None
         if self.near_dup:
@@ -871,33 +804,20 @@ class CurationAdmissionSink:
             )
         admitted.persist()
         try:
-            admitted.select(
-                "doc_id", "lang", "source", "text", "norm_hash"
-            ).write.mode("overwrite").parquet(
-                os.path.join(self._dir("out"), f"batch={epoch_id}")
-            )
-            admitted.select("norm_hash", "doc_id").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self._dir("state"), f"batch={epoch_id}"))
+            logs = self.logs
+            logs["out"].write(admitted.select(
+                "doc_id", "lang", "source", "text", "norm_hash"), epoch_id)
+            logs["state"].write(admitted.select("norm_hash", "doc_id"),
+                                epoch_id)
             if self.near_dup:
-                _shingle_rows(admitted).write.mode("overwrite").parquet(
-                    os.path.join(self._dir("shingles"), f"batch={epoch_id}")
-                )
-                rejects.write.mode("overwrite").parquet(
-                    os.path.join(self._dir("nd_rejects"),
-                                 f"batch={epoch_id}")
-                )
+                logs["shingles"].write(_shingle_rows(admitted), epoch_id)
+                logs["nd_rejects"].write(rejects, epoch_id)
             if self.semantic:
                 # EVERY semantic-stage candidate enters the state
                 # (kept or rejected): the one-pass rule blocks on any
                 # lower-id close doc, not just on kept ones.
-                sem_frame.write.mode("overwrite").parquet(
-                    os.path.join(self._dir("sem"), f"batch={epoch_id}")
-                )
-                sem_rejects.write.mode("overwrite").parquet(
-                    os.path.join(self._dir("sem_rejects"),
-                                 f"batch={epoch_id}")
-                )
+                logs["sem"].write(sem_frame, epoch_id)
+                logs["sem_rejects"].write(sem_rejects, epoch_id)
             # Incremental mix + DoReMi reweight (round 13, VERDICT r12
             # item 2 + ADVICE state-compaction item): both stages'
             # corpus-dependent inputs are per-source ADDITIVE sums, so
@@ -917,9 +837,7 @@ class CurationAdmissionSink:
                 _mix_batch_sums(admitted),
                 "source STRING, tok LONG", ["tok"],
             )
-            mix_report_from_sums(run_mix).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self._dir("mix"), f"batch={epoch_id}"))
+            logs["mix"].write(mix_report_from_sums(run_mix), epoch_id)
             from .queries.rag import doremi_weights_from_sums
 
             run_drm = self._fold_state(
@@ -928,11 +846,7 @@ class CurationAdmissionSink:
                 "source STRING, n LONG, ref_sum LONG, prx_sum LONG",
                 ["n", "ref_sum", "prx_sum"],
             )
-            doremi_weights_from_sums(run_drm).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(self._dir("doremi"), f"batch={epoch_id}")
-            )
+            logs["doremi"].write(doremi_weights_from_sums(run_drm), epoch_id)
         finally:
             admitted.unpersist()
             if rejects is not None:
@@ -946,53 +860,21 @@ class CurationAdmissionSink:
             docs.unpersist()
 
     def read_nd_rejects(self, spark: SparkSession) -> DataFrame:
-        base = self._dir("nd_rejects")
-        parts = [
-            os.path.join(base, d)
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not parts:
-            return spark.createDataFrame(
-                [], "doc_id LONG, corp_id LONG, jacc_milli LONG")
-        return spark.read.option("basePath", base).parquet(*parts).drop(
-            "batch"
-        )
+        return self.logs["nd_rejects"].read(
+            spark, empty="doc_id LONG, corp_id LONG, jacc_milli LONG")
 
     def read_sem_rejects(self, spark: SparkSession) -> DataFrame:
-        base = self._dir("sem_rejects")
-        parts = [
-            os.path.join(base, d)
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not parts:
-            return spark.createDataFrame(
-                [], "doc_id LONG, corp_id LONG, cos_micro LONG")
-        return spark.read.option("basePath", base).parquet(*parts).drop(
-            "batch"
-        )
+        return self.logs["sem_rejects"].read(
+            spark, empty="doc_id LONG, corp_id LONG, cos_micro LONG")
 
     def read_admitted(
         self, spark: SparkSession, through: int | None = None
     ) -> DataFrame:
-        base = self._dir("out")
-        parts = [
-            os.path.join(base, d)
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and (through is None or int(d.split("=", 1)[1]) <= through)
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not parts:
-            return spark.createDataFrame(
-                [], DOC_SCHEMA + ", norm_hash STRING"
-            )
-        return spark.read.option("basePath", base).parquet(*parts).drop(
-            "batch"
-        )
+        log = self.logs["out"]
+        return log.read(
+            spark,
+            log.committed(before=None if through is None else through + 1),
+            empty=DOC_SCHEMA + ", norm_hash STRING")
 
     def _fold_state(
         self, spark: SparkSession, kind: str, epoch_id: int,
@@ -1007,62 +889,26 @@ class CurationAdmissionSink:
         stream age (no per-batch partition sprawl to re-list), and
         ignoring partitions >= epoch_id makes a replay converge to the
         same totals it committed the first time."""
-        base = self._dir(kind)
-        prior = [
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and int(d.split("=", 1)[1]) < epoch_id
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        prev = (
-            spark.read.parquet(os.path.join(base, f"batch={max(prior)}"))
-            if prior else spark.createDataFrame([], schema)
-        )
+        log = self.logs[kind]
+        prev = log.latest(spark, schema, before=epoch_id)
         run = prev.unionByName(batch_sums).groupBy("source").agg(
             *[F.sum(c).cast("long").alias(c) for c in sum_cols]
         )
-        out = os.path.join(base, f"batch={epoch_id}")
-        run.write.mode("overwrite").parquet(out)
-        return spark.read.parquet(out)
+        return spark.read.parquet(log.write(run, epoch_id))
 
     def read_doremi(self, spark: SparkSession) -> DataFrame:
         """The latest committed DoReMi reweight release — empty (its
         schema) when no batch has committed yet, matching read_mix."""
-        base = self._dir("doremi")
-        committed = [
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not committed:
-            return spark.createDataFrame(
-                [], "source STRING, n LONG, excess_milli LONG,"
-                    " mult_milli LONG, w_milli LONG"
-            )
-        return spark.read.parquet(
-            os.path.join(base, f"batch={max(committed)}")
-        )
+        return self.logs["doremi"].latest(
+            spark, "source STRING, n LONG, excess_milli LONG,"
+                   " mult_milli LONG, w_milli LONG")
 
     def read_mix(self, spark: SparkSession) -> DataFrame:
         """The latest committed mix report — empty (mix schema) when no
         batch has committed yet (stream never ran, or the first batch
         crashed pre-commit), matching read_admitted/read_nd_rejects."""
-        base = self._dir("mix")
-        committed = [
-            int(d.split("=", 1)[1])
-            for d in (os.listdir(base) if os.path.isdir(base) else [])
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-        ]
-        if not committed:
-            return spark.createDataFrame(
-                [], "source STRING, tok LONG, p_milli LONG, w_milli LONG"
-            )
-        return spark.read.parquet(
-            os.path.join(base, f"batch={max(committed)}")
-        )
+        return self.logs["mix"].latest(
+            spark, "source STRING, tok LONG, p_milli LONG, w_milli LONG")
 
 
 def streaming_curation_pipeline(
@@ -1084,8 +930,6 @@ def streaming_curation_pipeline(
     shingle join vs the standing postings state); ``semantic=True``
     adds the embedding admission gate (dedup_semantic_prune's
     sign-bucket blocking vs the standing ``sem`` state)."""
-    from .pipeline import FileStreamSource, SparkPipeline
-
     sink = CurationAdmissionSink(out_dir, eval_grams, near_dup=near_dup,
                                  semantic=semantic)
     pipe = SparkPipeline(

@@ -45,6 +45,7 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import signal
 import time
 import uuid
@@ -134,21 +135,143 @@ class IdempotentParquetSink:
     offset commit lost — the at-least-once window) overwrites its own
     previous output instead of appending a duplicate. Batch id is
     stable across restarts from the same checkpoint, which is what
-    makes the overwrite idempotent."""
+    makes the overwrite idempotent.
+
+    This class is the one owner of the batch-partition log layout the
+    package's batch-keyed sinks share (the index and curation sinks
+    build on it):
+
+      batch=N/  micro-batch N's rows, written in overwrite mode;
+      base=B/   a compaction: every batch id <= B folded into one
+                relation.
+
+    Spark's ``_SUCCESS`` file is the commit point: a partition without
+    it (a write torn by a crash) is invisible to every reader here. A
+    read takes the newest committed base plus the batches after it,
+    and ``vacuum`` removes whatever a base covers."""
 
     def __init__(self, path: str):
         self.path = path
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .parquet(os.path.join(self.path, f"batch={epoch_id}"))
+    def _part(self, prefix: str, i: int) -> str:
+        """Directory of partition ``<prefix>=i``."""
+        return os.path.join(self.path, f"{prefix}={int(i)}")
+
+    def committed(self, prefix: str = "batch",
+                  before: int | None = None) -> list[int]:
+        """Sorted ids of the committed ``<prefix>=N`` partitions,
+        only those with N < ``before`` when given."""
+        if not os.path.isdir(self.path):
+            return []
+        ids = (int(d.split("=", 1)[1]) for d in os.listdir(self.path)
+               if d.startswith(prefix + "="))
+        return sorted(
+            i for i in ids
+            if (before is None or i < before)
+            and os.path.exists(os.path.join(self._part(prefix, i),
+                                            "_SUCCESS"))
         )
 
+    def write(self, df: DataFrame, i: int, prefix: str = "batch") -> str:
+        """Write ``df`` as partition ``<prefix>=i`` in overwrite mode,
+        so a replay rewrites its own partition; returns its path."""
+        path = self._part(prefix, i)
+        df.write.mode("overwrite").parquet(path)
+        return path
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self.write(batch_df, epoch_id)
+
+    def read(
+        self, spark: SparkSession, ids: list[int] | None = None,
+        prefix: str = "batch", schema: str | None = None,
+        provenance: str | None = None, empty: str | None = None,
+    ) -> DataFrame | None:
+        """Partitions ``<prefix>=i`` for ``ids`` (every committed one
+        when None) as one frame, read under this log's root as
+        basePath. The inferred partition column is dropped, or kept
+        as the LONG column ``provenance`` (as inferred when
+        ``provenance`` is the partition column itself). ``schema``
+        declares the data columns (no footer inference). With no ids
+        the result is an empty frame of DDL ``empty``, or None."""
+        if ids is None:
+            ids = self.committed(prefix)
+        if not ids:
+            return None if empty is None else spark.createDataFrame(
+                [], empty)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.option("basePath", self.path).parquet(
+            *[self._part(prefix, i) for i in ids])
+        if provenance == prefix:
+            return df
+        if provenance:
+            df = df.withColumn(provenance, F.col(prefix).cast("long"))
+        return df.drop(prefix)
+
     def read_all(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.path).parquet(
-            os.path.join(self.path, "batch=*")
-        )
+        """Every committed batch, with its ``batch`` id column."""
+        return self.read(spark, provenance="batch")
+
+    def latest(self, spark: SparkSession, empty: str,
+               before: int | None = None) -> DataFrame:
+        """The newest committed batch below ``before`` (the newest of
+        all when None) read on its own, without a partition column; an
+        empty frame of DDL ``empty`` when there is none."""
+        ids = self.committed(before=before)
+        if not ids:
+            return spark.createDataFrame([], empty)
+        return spark.read.parquet(self._part("batch", ids[-1]))
+
+    def standing(
+        self, spark: SparkSession, before: int | None = None,
+        schema: str | None = None, provenance: str | None = None,
+    ) -> DataFrame | None:
+        """The log as batch ``before`` sees it (all of it when None):
+        the newest committed base below ``before`` unioned with the
+        committed batches after that base and below ``before``; None
+        when nothing is committed. A replayed batch therefore never
+        sees its own leftovers, folded or not. ``provenance`` names a
+        LONG column holding the id of the batch that wrote each row:
+        batch rows take their partition id, and a base keeps its own
+        column (or is stamped with the base id when it has none).
+        ``schema`` is passed to every read, as in ``read``."""
+        bases = self.committed("base", before)
+        b = bases[-1] if bases else None
+        out = None
+        if b is not None:
+            # the base dir is read directly (no basePath): its files
+            # carry the data columns and no inferred partition column
+            reader = spark.read if schema is None else spark.read.schema(
+                schema)
+            out = reader.parquet(self._part("base", b))
+            if provenance and provenance not in out.columns:
+                out = out.withColumn(provenance, F.lit(b).cast("long"))
+        deltas = self.read(
+            spark, [i for i in self.committed(before=before)
+                    if b is None or i > b],
+            schema=schema, provenance=provenance)
+        if deltas is not None:
+            out = deltas if out is None else out.unionByName(deltas)
+        return out
+
+    def vacuum(self, through: int | None = None) -> list[str]:
+        """Remove the partitions the newest committed base covers:
+        every batch with id <= that base, and every older base.
+        ``through`` removes the batches with id <= ``through`` instead,
+        for a log whose every batch supersedes the ones before it.
+        Returns the removed partition names. Replay-safe: a replayed
+        covered batch recreates a dir no reader here uses, and the
+        next vacuum removes it again."""
+        bases = self.committed("base")
+        if through is None:
+            if not bases:
+                return []
+            through = bases[-1]
+        dead = [f"batch={i}" for i in self.committed(before=through + 1)]
+        dead += [f"base={b}" for b in bases[:-1]]
+        for rel in dead:
+            shutil.rmtree(os.path.join(self.path, rel))
+        return dead
 
 
 class MergeUpsertSink:
@@ -198,8 +321,6 @@ class MergeUpsertSink:
             os.rename(cur_dir, old)
         os.rename(stage, cur_dir)
         if os.path.exists(old):
-            import shutil
-
             shutil.rmtree(old, ignore_errors=True)
 
     def read_snapshot(self, spark: SparkSession) -> DataFrame:
@@ -492,8 +613,6 @@ class MorUpsertSink:
         the removed relation names; time travel below ``retain_from``
         is the caller's contract to give up, exactly as with
         vacuum_manifest."""
-        import shutil
-
         comps = self._compactions()
         protected = max((s for s in comps if s <= retain_from),
                         default=None)

@@ -2919,7 +2919,7 @@ def sim_ivfpq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rather than a count that a foreign layout could satisfy
     path = _fixture_dir(sf_dir, "ivfpq_stream_mod3")
     sink = IvfpqIndexSink(path, cenball, cbball)
-    if set(sink._committed()) != {0, 1, 2}:
+    if set(sink.log.committed()) != {0, 1, 2}:
         for i in range(3):
             sink(v.where(f"vec_id % 3 = {i}"), i)
     return _ivfpq_search(v, cen, cbball=cbball,
@@ -2961,8 +2961,8 @@ def sim_ivfpq_stream_compacted(spark: SparkSession,
     )
     path = _fixture_dir(sf_dir, "ivfpq_stream_mod3_compacted")
     sink = IvfpqIndexSink(path, cenball, cbball)
-    if not sink._bases():
-        if set(sink._committed()) != {0, 1, 2}:
+    if not sink.log.committed("base"):
+        if set(sink.log.committed()) != {0, 1, 2}:
             for i in range(3):
                 sink(v.where(f"vec_id % 3 = {i}"), i)
         sink.compact(spark)

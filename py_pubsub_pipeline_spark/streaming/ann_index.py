@@ -14,29 +14,26 @@ stage:
     (the same `_ivfpq_assign` / code-expr arithmetic every search key
     uses — encoding is per-row deterministic, so a streamed index is
     VALUE-IDENTICAL to a batch-built one over the same vectors);
-  - the 10-int-per-vector codes land as a batch-id-keyed partition
-    (overwrite mode + parquet _SUCCESS commit marker), so the
-    at-least-once replay window converges byte-identically — the
-    IdempotentParquetSink discipline applied to index state;
-  - `read_index` unions the committed partitions: exactly the codes
+  - the 10-int-per-vector codes land as one partition of an
+    IdempotentParquetSink log (pipeline.py), the owner of the
+    batch-partition layout, its ``_SUCCESS`` commit rule, the
+    base-plus-deltas read and vacuum — so the at-least-once replay
+    window converges byte-identically;
+  - `read_index` is that log's committed relation: exactly the codes
     relation `_ivfpq_search` scans, so search-over-streamed-index is
     the registered plan with a different provenance.
 
 Scale: per-trigger cost is O(batch) encode work (two broadcast
 crossJoins against one-row codebook tables — no shuffle); the index
-grows by appended partitions, never rewrites.  Round 14 wires the
-small-file maintenance the round-13 docstring deferred: ``compact``
-folds the committed ``batch=N`` partitions into ONE ``base={through}``
-relation (the compact_manifest staging/commit discipline applied to
-index state — the same closure round 13 gave the MoR table), after
-which ``read_index`` unions the newest base plus only the batch
-partitions appended SINCE it, so a months-long ingest reads O(deltas
-since compaction) files instead of one per trigger since stream
-birth; ``vacuum`` expires the folded partitions.  Correctness is
-untouched because the relation stays a plain union and encoding is
-per-row deterministic (pytest: read-identity pre/post compaction,
-replay-after-compaction convergence, O(1) files for compacted
-ranges).
+grows by appended partitions, never rewrites.  ``compact`` folds the
+committed batches into one ``base={through}`` relation, incrementally
+(newest earlier base plus the deltas after it), so a months-long
+ingest reads O(deltas since compaction) files instead of one per
+trigger since stream birth; ``vacuum`` expires the folded partitions.
+Correctness is untouched because the relation stays a plain union and
+encoding is per-row deterministic (pytest: read-identity pre/post
+compaction, replay-after-compaction convergence, O(1) files for
+compacted ranges, torn bases ignored).
 
 Reference anchor: this is the pipeline's R9/R10 publish-then-commit
 shape (pubsub_pipeline.py:48-52 ack-after-publish) applied to index
@@ -45,15 +42,17 @@ artifacts instead of messages.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
+
+from ..pipeline import IdempotentParquetSink
 
 
 class IvfpqIndexSink:
     """foreachBatch sink that appends IVF-PQ codes for each arriving
     vector batch, encoding against FIXED (trained or sample-init)
-    codebooks supplied at construction — FAISS's `add` phase.
+    codebooks supplied at construction — FAISS's `add` phase.  The
+    codes land in the IdempotentParquetSink log ``log`` (``batch=N``
+    per trigger, ``base=B`` per compaction).
 
     ``cenball``: one-row DataFrame with a ``cents`` array of
     (cid, ce) structs (``_ivfpq_cenball``'s output).
@@ -64,34 +63,18 @@ class IvfpqIndexSink:
 
     def __init__(self, path: str, cenball: DataFrame, cbball: DataFrame):
         self.path = path
+        self.log = IdempotentParquetSink(path)
         self.cenball = cenball
         self.cbball = cbball
 
-    def _batch_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.path, f"batch={int(epoch_id)}")
+    def _codes(self, spark: SparkSession,
+               before: int | None = None) -> DataFrame | None:
+        # Schema declared (the codes contract shared with
+        # _ivfpq_encode) so the serve path skips the per-call parquet
+        # footer inference.
+        from ..queries.similarity import _IVFPQ_CODES_DDL
 
-    def _committed(self) -> list[int]:
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith("batch=")
-            and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
-        )
-
-    def _bases(self) -> list[int]:
-        """Committed compaction bases: ``base={B}`` holds the folded
-        codes of every batch id <= B (parquet _SUCCESS is the commit
-        marker, same as the batch partitions)."""
-        if not os.path.isdir(self.path):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.path)
-            if d.startswith("base=")
-            and os.path.exists(os.path.join(self.path, d, "_SUCCESS"))
-        )
+        return self.log.standing(spark, before, schema=_IVFPQ_CODES_DDL)
 
     def compact(self, spark: SparkSession,
                 through: int | None = None) -> str:
@@ -108,8 +91,8 @@ class IvfpqIndexSink:
         batch rewrites its dir byte-identically and ``read_index``
         ignores it (its id is covered by the base), so at-least-once
         replay around a compaction converges."""
-        batches = self._committed()
-        bases = self._bases()
+        batches = self.log.committed()
+        bases = self.log.committed("base")
         if through is None:
             if not batches:
                 if bases:
@@ -121,50 +104,28 @@ class IvfpqIndexSink:
             through = max(batches)
         through = int(through)
         if through in bases:
-            # the _SUCCESS marker IS the commit point and the folded
-            # content is deterministic — replay is a no-op (and must
-            # not rewrite a base a concurrent read may be scanning)
+            # the committed base and its deterministic content make
+            # replay a no-op (and a base a concurrent read may be
+            # scanning must not be rewritten)
             return f"base={through}"
-        prior = max((b for b in bases if b <= through), default=None)
-        parts = []
-        if prior is not None:
-            parts.append(os.path.join(self.path, f"base={prior}"))
-        parts += [self._batch_dir(b) for b in batches
-                  if b <= through and (prior is None or b > prior)]
-        if not parts:
+        folded = self._codes(spark, through + 1)
+        if folded is None:
             raise FileNotFoundError(
                 f"nothing committed at or below batch {through}: "
                 f"{self.path}")
-        folded = spark.read.parquet(*parts)
-        folded.write.mode("overwrite").parquet(
-            os.path.join(self.path, f"base={through}"))
+        self.log.write(folded, through, "base")
         return f"base={through}"
 
     def vacuum(self) -> list[str]:
-        """Expire index partitions superseded by the newest base: a
-        ``batch=N`` dir with N <= base is dead weight (read_index
-        never unions it again), as is every older base.  Returns the
-        removed relation names.  Safe against replay: a replayed
-        folded batch merely recreates a dir the reader ignores, which
-        the next vacuum removes again."""
-        import shutil
-
-        bases = self._bases()
-        if not bases:
-            return []
-        newest = max(bases)
-        dead = [f"batch={b}" for b in self._committed() if b <= newest]
-        dead += [f"base={b}" for b in bases if b < newest]
-        for rel in dead:
-            shutil.rmtree(os.path.join(self.path, rel))
-        return dead
+        """Expire the partitions the newest base covers (the log's
+        vacuum); returns the removed partition names."""
+        return self.log.vacuum()
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         from ..queries.similarity import _ivfpq_assign, _ivfpq_encode
 
         res = _ivfpq_assign(batch_df.select("vec_id", "e"), self.cenball)
-        enc = _ivfpq_encode(res, self.cbball)
-        enc.write.mode("overwrite").parquet(self._batch_dir(epoch_id))
+        self.log.write(_ivfpq_encode(res, self.cbball), epoch_id)
 
     def read_index(self, spark: SparkSession) -> DataFrame:
         """The committed codes relation — the exact input
@@ -173,28 +134,7 @@ class IvfpqIndexSink:
         batch id <= its seq) and unions only the batch partitions
         appended after it — O(deltas since compaction) files, with
         replayed pre-base batch dirs excluded by construction."""
-        from ..queries.similarity import _IVFPQ_CODES_DDL
-
-        bases = self._bases()
-        base = max(bases) if bases else None
-        out = None
-        if base is not None:
-            # read the base dir directly (no basePath): its files carry
-            # the plain code columns, no inferred partition column.
-            # Schema declared (the codes contract shared with
-            # _ivfpq_encode) so the serve path skips the per-call
-            # parquet footer inference.
-            out = spark.read.schema(_IVFPQ_CODES_DDL).parquet(
-                os.path.join(self.path, f"base={base}"))
-        deltas = [self._batch_dir(b) for b in self._committed()
-                  if base is None or b > base]
-        if deltas:
-            d = (
-                spark.read.schema(_IVFPQ_CODES_DDL)
-                .option("basePath", self.path)
-                .parquet(*deltas).drop("batch")
-            )
-            out = d if out is None else out.unionByName(d)
+        out = self._codes(spark)
         if out is None:
             raise FileNotFoundError(f"no committed index batches: "
                                     f"{self.path}")

@@ -266,8 +266,7 @@ def test_neardup_admission_invariants_and_crash_convergence(
 
     def snapshot(sink):
         adm = {(r["doc_id"], r["batch"]) for r in
-               spark.read.option("basePath", sink._dir("out"))
-               .parquet(sink._dir("out") + "/batch=*")
+               sink.logs["out"].read_all(spark)
                .select("doc_id", "batch").collect()}
         rej = {(r["doc_id"], r["corp_id"], r["jacc_milli"])
                for r in sink.read_nd_rejects(spark).collect()}
@@ -499,7 +498,8 @@ def test_state_compaction_is_invisible_to_the_stream(spark, docs, tmp_path):
         for kind, cols in (("state", ["norm_hash", "doc_id"]),
                            ("shingles", ["doc_id", "s"]),
                            ("sem", ["doc_id", "emb"])):
-            df = sink._standing_df(spark, kind, before)
+            df = sink.logs[kind].standing(spark, before,
+                                          provenance="src_batch")
             out[kind] = (set() if df is None else
                          {tuple(map(str, r)) for r in
                           df.select(*cols).collect()})
@@ -507,7 +507,7 @@ def test_state_compaction_is_invisible_to_the_stream(spark, docs, tmp_path):
 
     before = standing_sets()
     assert before["state"] and before["shingles"] and before["sem"]
-    newest = sink._committed_ids("state", "batch")[-1]
+    newest = sink.logs["state"].committed()[-1]
     # availableNow drained => quiesced => folding the newest is allowed
     folded = sink.compact_state(spark, through=newest)
     assert folded == {k: f"base={newest}"
@@ -633,17 +633,18 @@ def test_sem_state_rebuckets_wider_at_compaction(spark, tmp_path):
     _drive(spark, sink, drop, str(tmp_path / "ckpt"))
 
     assert sink._sem_bits() == SEM_ND_BITS
-    newest = sink._committed_ids("state", "batch")[-1]
+    newest = sink.logs["state"].committed()[-1]
     sink.compact_state(spark, through=newest)
     sink.vacuum_state()
     wide = sink._sem_bits()
-    n_sem = sum(1 for _ in sink._standing_df(spark, "sem", 10_000)
-                .collect())
+    n_sem = sum(1 for _ in sink.logs["sem"].standing(
+        spark, 10_000, provenance="src_batch").collect())
     assert wide == _derive_sem_bits(n_sem) > SEM_ND_BITS
 
     # occupancy boundedness: the widest bucket shrinks under the
     # re-bucketed index vs the same frames at the default width
-    sem = sink._standing_df(spark, "sem", 10_000)
+    sem = sink.logs["sem"].standing(
+        spark, 10_000, provenance="src_batch")
     occ = lambda df: max(  # noqa: E731
         r["n"] for r in df.groupBy("bkt").agg(
             F.count("*").alias("n")).collect())
@@ -709,7 +710,7 @@ def test_ttl_eviction_readmits_expired_duplicates(spark, docs, tmp_path):
     _append_drop_files(phase1, drop, n_files=9, t0=1_700_000_000)
     sink = CurationAdmissionSink(str(tmp_path / "out"), eval_grams)
     _drive(spark, sink, drop, str(tmp_path / "ckpt"))
-    batches = sink._committed_ids("state", "batch")
+    batches = sink.logs["state"].committed()
     assert batches == [0, 1, 2]
 
     def admitted_by_batch(b):
@@ -728,7 +729,8 @@ def test_ttl_eviction_readmits_expired_duplicates(spark, docs, tmp_path):
     assert all(s == 0 and h == 2 for _n, s, h in got_ev)
     # standing view for the NEXT batch excludes the expired keys
     standing = {r["norm_hash"]
-                for r in sink._standing(spark, 3).collect()}
+                for r in sink.logs["state"].standing(
+                    spark, 3, provenance="src_batch").collect()}
     assert standing == (b1 | b2)
 
     # re-arrivals: duplicates of batch-0 docs are RE-ADMITTED,
@@ -763,12 +765,13 @@ def test_ttl_eviction_readmits_expired_duplicates(spark, docs, tmp_path):
     # second generation: compact through the re-admission batch with
     # the same TTL — batch-1 rows (folded INTO base=2 earlier) now age
     # out, proving provenance survives the first rewrite
-    newest = sink._committed_ids("state", "batch")[-1]
+    newest = sink.logs["state"].committed()[-1]
     sink.compact_state(spark, through=newest, ttl_batches=2)
     ev2 = {(r["norm_hash"], r["src_batch"]) for r in
            sink.read_evicted(spark).filter(
                F.col("horizon") == newest).collect()}
     assert {(h, s) for h, s in ev2 if s == 1} == {(h, 1) for h in b1}
     standing2 = {r["norm_hash"]
-                 for r in sink._standing(spark, newest + 1).collect()}
+                 for r in sink.logs["state"].standing(
+                     spark, newest + 1, provenance="src_batch").collect()}
     assert not (standing2 & b1)

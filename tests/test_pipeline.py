@@ -130,6 +130,22 @@ def test_idempotent_sink_survives_replay_without_duplicates(spark, tmp_path):
     assert replayed == [0, 1, 2], "replayed batch must overwrite, not append"
 
 
+def test_idempotent_sink_read_all_skips_torn_batch(spark, tmp_path):
+    """A batch dir without Spark's _SUCCESS commit marker (a write torn
+    by a crash: part files landed, the job never committed) holds no
+    published rows, so read_all must not return them."""
+    import shutil
+
+    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    sink(spark.createDataFrame([(1,), (2,)], "i INT").coalesce(1), 0)
+    torn = tmp_path / "out" / "batch=1"
+    torn.mkdir()
+    part = next(p for p in (tmp_path / "out" / "batch=0").iterdir()
+                if p.name.startswith("part-"))
+    shutil.copy(part, torn / part.name)
+    assert sorted(r["i"] for r in sink.read_all(spark).collect()) == [1, 2]
+
+
 def test_metrics_listener_reports_per_batch_rows_and_commit(spark, tmp_path):
     """R13 observability (reference per-stage logs P:143-184): the
     pipeline's StreamingQueryListener must report, per micro-batch,

@@ -410,7 +410,7 @@ def test_ivfpq_index_sink_streams_value_identical_index(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    assert len(sink._committed()) >= 2
+    assert len(sink.log.committed()) >= 2
 
     code_cols = ["vec_id", "cell"] + [f"code_{m}" for m in range(PQ_M)]
     streamed = {tuple(r) for r in
@@ -426,7 +426,7 @@ def test_ivfpq_index_sink_streams_value_identical_index(spark, tmp_path):
     # replay the last committed batch verbatim: overwrite converges.
     # The batch's membership comes from the committed partition itself
     # (epoch->file assignment is the engine's, not ours to assume).
-    last = sink._committed()[-1]
+    last = sink.log.committed()[-1]
     member_ids = [r["vec_id"] for r in spark.read.parquet(
         str(tmp_path / "idx" / f"batch={last}")).select("vec_id").collect()]
     rows = v.where(F.col("vec_id").isin(member_ids))
@@ -710,3 +710,75 @@ def test_ivfpq_index_sink_compaction_read_identity_and_replay(
             f"codes DDL: {inferred.simpleString()} != "
             f"{declared.simpleString()}"
         )
+
+
+@pytest.mark.parametrize("log_kind", ["ivfpq_index", "curation_state"])
+def test_torn_base_is_ignored_then_rewritten_by_next_compaction(
+    spark, tmp_path, log_kind
+):
+    """A crash mid-compaction leaves a ``base=B`` dir holding part files
+    and no _SUCCESS. The standing read must ignore it and keep serving
+    the batches it would fold, and the next compaction must rewrite it
+    and commit, after which vacuum serves the same rows from the base
+    alone. Shared by every sink built on the batch-partition log."""
+    import os
+
+    if log_kind == "ivfpq_index":
+        from py_pubsub_pipeline_spark.queries.similarity import (
+            IVF_NLIST, PQ_K, _dvec, _ivfpq_assign, _ivfpq_cb_init,
+            _ivfpq_cenball,
+        )
+        from py_pubsub_pipeline_spark.streaming.ann_index import (
+            IvfpqIndexSink,
+        )
+
+        v = table(spark, SF_SMALL, "embeddings").select(
+            "vec_id", _dvec("embedding", "e"))
+        cenball = _ivfpq_cenball(v.filter(F.col("vec_id") < IVF_NLIST).select(
+            F.col("vec_id").alias("cid"), F.col("e").alias("ce")))
+        cbball = _ivfpq_cb_init(
+            _ivfpq_assign(v.where(f"vec_id < {IVF_NLIST + PQ_K}"), cenball))
+        sink = IvfpqIndexSink(str(tmp_path / "idx"), cenball, cbball)
+        for i in range(3):
+            sink(v.where(f"vec_id % 3 = {i}"), i)
+        log = sink.log
+        read = lambda: sink.read_index(spark)  # noqa: E731
+        compact = lambda: sink.compact(spark, through=2)  # noqa: E731
+        vacuum = sink.vacuum
+    else:
+        from py_pubsub_pipeline_spark.curation_stream import (
+            CurationAdmissionSink, build_eval_ngram_index,
+        )
+
+        docs = table(spark, SF_SMALL, "documents").select(
+            "doc_id", "lang", "source", "text")
+        sink = CurationAdmissionSink(
+            str(tmp_path / "cur"), build_eval_ngram_index(docs))
+        for i in range(3):
+            sink(docs.where(F.col("doc_id") % 3 == i), i)
+        log = sink.logs["state"]
+        read = lambda: log.standing(  # noqa: E731
+            spark, 3, provenance="src_batch")
+        compact = lambda: sink.compact_state(  # noqa: E731
+            spark, through=2)["state"]
+        vacuum = sink.vacuum_state
+
+    def rows():
+        return {tuple(r) for r in read().collect()}
+
+    before = rows()
+    assert len(before) > 5
+    # the torn base: a partial fold whose job never committed
+    base = os.path.join(log.path, "base=2")
+    read().limit(5).write.parquet(base)
+    for marker in ("_SUCCESS", "._SUCCESS.crc"):
+        os.remove(os.path.join(base, marker))
+    assert any(f.startswith("part-") for f in os.listdir(base))
+    assert log.committed("base") == []
+    assert rows() == before
+    assert compact() == "base=2"
+    assert log.committed("base") == [2]
+    assert rows() == before
+    vacuum()
+    assert log.committed() == []
+    assert rows() == before
