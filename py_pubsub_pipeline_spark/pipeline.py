@@ -21,6 +21,11 @@ Streaming:
                             ordering as the reference's Acknowledger,
                             same at-least-once window (publish ok +
                             commit lost => duplicates, exactly P:48-52)
+- per-stage logging      -> StreamingQueryListener (R13, P:143-184):
+                            one progress event per micro-batch, read
+                            as one JSON document; observe() only where
+                            the event lacks the count (column path,
+                            dead-letter count)
 - graceful shutdown      -> SIGINT/SIGTERM -> query.stop() (P:15-24)
 - bounded run            -> trigger(availableNow=True) drains & stops
                             (P:132-166's max_processed_messages, but
@@ -44,6 +49,7 @@ from __future__ import annotations
 
 import json
 import logging
+import math
 import os
 import shutil
 import signal
@@ -55,6 +61,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.listener import JStreamingQueryListener
 from pyspark.sql.types import StructType
 
 log = logging.getLogger(__name__)
@@ -656,18 +663,71 @@ class CollectingSink:
 # ---------------------------------------------------------- observability
 
 
+def _percentile(values: list[float], q: float) -> float | None:
+    """Nearest-rank percentile of ``values`` (None when empty)."""
+    if not values:
+        return None
+    ordered = sorted(values)
+    return ordered[max(0, math.ceil(q / 100 * len(ordered)) - 1)]
+
+
+def _last_batch_committed(checkpoint_dir: str) -> bool:
+    """True when the newest ``offsets/N`` of a checkpoint has its
+    ``commits/N``: the batch the query planned last also finished."""
+    try:
+        planned = [int(n) for n in os.listdir(
+            os.path.join(checkpoint_dir, "offsets")) if n.isdigit()]
+    except FileNotFoundError:
+        return True
+    return not planned or os.path.exists(
+        os.path.join(checkpoint_dir, "commits", str(max(planned))))
+
+
+def _backlog(sources: list[dict]) -> int | None:
+    """Messages the sources hold past a progress event's read end:
+    ``latestOffset`` minus ``endOffset``, summed; None when there is no
+    source or an offset is not ``{"seq": n}``."""
+    try:
+        return sum(s["latestOffset"]["seq"] - s["endOffset"]["seq"]
+                   for s in sources) if sources else None
+    except (KeyError, TypeError):
+        return None
+
+
+class _JsonProgressCallback(JStreamingQueryListener):
+    """The py4j callback the JVM's ``PythonStreamingQueryListener``
+    calls. A progress event is read with one py4j call, the event's
+    ``json()``, and parsed in Python, where pyspark's wrapper makes a
+    round trip per field, map entry and source; started and terminated
+    events are rare and keep pyspark's wrappers. Idle events are
+    dropped."""
+
+    def onQueryProgress(self, jevent) -> None:  # noqa: ANN001
+        self.pylistener.onQueryProgress(json.loads(jevent.json())["progress"])
+
+    def onQueryIdle(self, jevent) -> None:  # noqa: ANN001
+        pass
+
+
 class PipelineMetricsListener:
     """R13 observability (reference logs each stage of every cycle:
     pull P:143-145, process/publish P:156-158, ack P:178-184). The
     Structured-Streaming analog is a StreamingQueryListener: one
-    progress event per micro-batch carrying rows-in, per-stage
-    durations, and — via the Dataset.observe() hook installed by
-    SparkPipeline — the exact rows-out count the sink published.
+    progress event per micro-batch carrying rows-in and per-stage
+    durations. Rows-out is the event's ``numInputRows`` on the Python
+    processor path, which yields one row per input; on the column path
+    (a column_processor may filter or explode rows) it is counted by
+    the Dataset.observe() hook SparkPipeline attaches there, as are the
+    quarantined rows on the dead-letter path. Each event is read as one
+    JSON document (`_JsonProgressCallback`): one py4j call per batch,
+    made while the next batch's sink runs in the same Python driver.
 
     Collected records (``batches``) are plain dicts, queryable by
     tests and ops tooling; each batch also logs one line at the
-    reference's granularity. onQueryTerminated carries the commit
-    status of the run as a whole (exception => batch NOT committed).
+    reference's granularity. ``totals()`` derives the run's figures
+    from them. onQueryTerminated carries the commit status of the run
+    as a whole: committed unless the query failed or, with a
+    checkpoint, the batch it planned last has no commit-log entry.
 
     A listener sees every query of its session, so it records only its
     own pipeline's: the pipeline starts its query under ``query_name``,
@@ -681,12 +741,16 @@ class PipelineMetricsListener:
         self.terminated: dict | None = None
         self.query_name = f"pipeline-{uuid.uuid4().hex}"
         self._run_id: str | None = None
+        self._newest_sources: list[dict] = []
+        self._checkpoint_dir: str | None = None
         self._spark: SparkSession | None = None
         self._delegate = None
 
-    def attach(self, spark: SparkSession) -> None:
-        """Register the listener with `spark`'s streaming queries."""
+    def attach(self, spark: SparkSession, checkpoint_dir: str | None) -> None:
+        """Register the listener with `spark`'s streaming queries;
+        ``checkpoint_dir`` is the query's, read when it terminates."""
         self._spark = spark
+        self._checkpoint_dir = checkpoint_dir
         spark.streams.addListener(self._listener())
 
     def detach(self) -> None:
@@ -701,20 +765,22 @@ class PipelineMetricsListener:
         if event.name == self.query_name:
             self._run_id = str(event.runId)
 
-    def _on_progress(self, progress) -> None:  # noqa: ANN001
-        if progress.name != self.query_name:
+    def _on_progress(self, progress: dict) -> None:
+        """Record one progress event, given as its parsed JSON."""
+        if progress.get("name") != self.query_name:
             return
-        observed = progress.observedMetrics.get("pipeline")
-        obs = observed.asDict() if observed is not None else {}
+        observed = progress.get("observedMetrics", {}).get("pipeline", {})
+        rows_in = progress["numInputRows"]
         rec = {
-            "batch_id": progress.batchId,
-            "rows_in": progress.numInputRows,
-            "rows_out": obs.get("rows_out"),
-            "rows_dlq": obs.get("rows_dlq") or 0,
-            "duration_ms": dict(progress.durationMs or {}),
-            "timestamp": progress.timestamp,
+            "batch_id": progress["batchId"],
+            "rows_in": rows_in,
+            "rows_out": observed.get("rows_out", rows_in),
+            "rows_dlq": observed.get("rows_dlq", 0),
+            "duration_ms": progress.get("durationMs", {}),
+            "timestamp": progress["timestamp"],
         }
         self.batches.append(rec)
+        self._newest_sources = progress.get("sources", [])
         log.info(
             "batch %d: pulled %d, published %s, committed "
             "(addBatch %sms, commitOffsets %sms)",
@@ -726,25 +792,34 @@ class PipelineMetricsListener:
     def _on_terminated(self, event) -> bool:  # noqa: ANN001
         if str(event.runId) != self._run_id:
             return False
+        committed = event.exception is None and (
+            self._checkpoint_dir is None
+            or _last_batch_committed(self._checkpoint_dir))
         self.terminated = {
             "query_id": str(event.id),
             "run_id": self._run_id,
             "exception": event.exception,
-            "committed": event.exception is None,
+            "committed": committed,
         }
-        if event.exception is None:
-            log.info("query %s terminated cleanly", event.id)
-        else:
+        if event.exception is not None:
             log.error("query %s FAILED (batch not committed): %s",
                       event.id, event.exception)
+        elif not committed:
+            log.warning("query %s stopped before its last batch "
+                        "committed; a restart runs that batch", event.id)
+        else:
+            log.info("query %s terminated cleanly", event.id)
         return True
 
     def _listener(self):  # noqa: ANN202
         """Build the pyspark StreamingQueryListener wrapping this
         collector (kept separate so the collector itself stays a plain
-        picklable object with no JVM references)."""
+        picklable object with no JVM references). Its ``_jlistener``
+        is the JVM wrapper around `_JsonProgressCallback`, which
+        ``spark.streams.addListener``/``removeListener`` pass on."""
         if self._delegate is not None:
             return self._delegate
+        from pyspark import SparkContext
         from pyspark.sql.streaming import StreamingQueryListener
 
         outer = self
@@ -754,15 +829,20 @@ class PipelineMetricsListener:
                 log.info("query %s started (run %s)", event.id, event.runId)
                 outer._on_started(event)
 
-            def onQueryProgress(self, event) -> None:  # noqa: ANN001
-                outer._on_progress(event.progress)
-
-            def onQueryIdle(self, event) -> None:  # noqa: ANN001
-                pass
+            def onQueryProgress(self, progress: dict) -> None:
+                outer._on_progress(progress)
 
             def onQueryTerminated(self, event) -> None:  # noqa: ANN001
                 if outer._on_terminated(event):
                     outer.detach()
+
+            @property
+            def _jlistener(self):  # noqa: ANN202
+                if not hasattr(self, "_jlistenerobj"):
+                    self._jlistenerobj = (
+                        SparkContext._jvm.PythonStreamingQueryListenerWrapper(
+                            _JsonProgressCallback(self)))
+                return self._jlistenerobj
 
         self._delegate = _L()
         return self._delegate
@@ -770,11 +850,27 @@ class PipelineMetricsListener:
     # -- convenience for tests/ops --
 
     def totals(self) -> dict:
+        """The run's figures, from the recorded events: batch and row
+        counts; trigger latency p50/p99 (``triggerExecution``, ms);
+        rows/s over summed trigger time; the newest event's backlog,
+        its sources' ``latestOffset`` minus ``endOffset`` (None unless
+        every offset is ``{"seq": n}``); and the dead-letter rate,
+        quarantined rows per input row."""
+        trigger_ms = [b["duration_ms"].get("triggerExecution", 0)
+                      for b in self.batches]
+        rows_in = sum(b["rows_in"] for b in self.batches)
+        rows_dlq = sum(b.get("rows_dlq", 0) for b in self.batches)
+        trigger_s = sum(trigger_ms) / 1e3
         return {
             "batches": len(self.batches),
-            "rows_in": sum(b["rows_in"] for b in self.batches),
+            "rows_in": rows_in,
             "rows_out": sum(b["rows_out"] or 0 for b in self.batches),
-            "rows_dlq": sum(b.get("rows_dlq", 0) for b in self.batches),
+            "rows_dlq": rows_dlq,
+            "trigger_ms_p50": _percentile(trigger_ms, 50),
+            "trigger_ms_p99": _percentile(trigger_ms, 99),
+            "rows_per_s": rows_in / trigger_s if trigger_s else None,
+            "backlog": _backlog(self._newest_sources),
+            "dlq_rate": rows_dlq / rows_in if rows_in else None,
         }
 
 
@@ -862,8 +958,10 @@ class SparkPipeline:
     # None (default) keeps reference-parity fail-the-batch semantics.
     dead_letter_dir: str | None = None
     killer: GracefulKiller = KILLER
-    # R13: per-batch metrics (rows in/out, stage durations, commit
-    # status) — populated by the listener process() attaches.
+    # R13: per-batch metrics (rows in/out/dead-lettered, stage
+    # durations, commit status) from the listener process() attaches,
+    # one JSON progress event per batch; totals() adds trigger p50/p99,
+    # rows/s, backlog and the dead-letter rate.
     metrics: PipelineMetricsListener = field(
         default_factory=PipelineMetricsListener
     )
@@ -946,20 +1044,19 @@ class SparkPipeline:
         trigger, because the latter stops after a single batch of a
         rate-capped custom source). False runs continuously until
         stop()/signal. Returns the StreamingQuery."""
-        # observe() rides the batch itself (no extra job): the exact
-        # published-row count lands in each progress event, which the
-        # metrics listener collects (R13; foreachBatch sinks otherwise
-        # report no output-row metric).
+        # observe() rides the batch (no extra job), but its
+        # CollectMetrics node costs every trigger: attach it only where
+        # the progress event lacks the count (R13; foreachBatch sinks
+        # report no output-row metric). A column_processor may filter
+        # or explode rows, and quarantined rows are counted nowhere
+        # else; the Python path yields one row per input, so its
+        # rows_out is the event's numInputRows.
         out = self._transformed()
         dlq = self.dead_letter_dir
-        obs = [F.count(F.lit(1)).alias("rows_out")]
-        if dlq is not None:
-            obs.append(
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("rows_dlq")
-            )
-        out = out.observe("pipeline", *obs)
+        if self.column_processor is not None:
+            out = out.observe("pipeline", F.count(F.lit(1)).alias("rows_out"))
+        elif dlq is not None:
+            out = out.observe("pipeline", F.count("error").alias("rows_dlq"))
 
         # Without a DLQ the batch goes to the sink uncached (see the
         # class docstring's foreachBatch rule).
@@ -993,7 +1090,7 @@ class SparkPipeline:
                 finally:
                     batch_df.unpersist()
 
-        self.metrics.attach(self.spark)
+        self.metrics.attach(self.spark, self.checkpoint_dir)
         writer = out.writeStream.queryName(self.metrics.query_name)
         writer = writer.foreachBatch(sink_fn)
         if self.checkpoint_dir:

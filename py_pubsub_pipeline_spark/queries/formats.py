@@ -1163,6 +1163,17 @@ def _manifest_files(base: str, version: str) -> list[str]:
         return _json.load(f)["files"]
 
 
+def _committed_data_files(base: str) -> list[str]:
+    """The ``file-N`` data directories on disk whose write committed
+    (Spark's ``_SUCCESS`` is present), sorted: a torn write is not a
+    file of the table."""
+    return sorted(
+        d for d in os.listdir(base)
+        if d.startswith("file-")
+        and os.path.exists(os.path.join(base, d, "_SUCCESS"))
+    )
+
+
 def _file_stats(spark: SparkSession, base: str, rel: str,
                 file_col: str, status: str) -> DataFrame:
     return (
@@ -1263,11 +1274,7 @@ def scan_manifest_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the orphan list."""
     base = _manifest_fixture(spark, sf_dir)
     latest = set(_manifest_files(base, "v3"))
-    on_disk = sorted(
-        d for d in os.listdir(base)
-        if d.startswith("file-")
-        and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-    )
+    on_disk = _committed_data_files(base)
     out = None
     for rel in on_disk:
         if rel in latest:
@@ -1327,11 +1334,7 @@ def scan_manifest_retention_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ver, sid in (("v1", 1), ("v2", 2), ("v3", 3)):
         if sid >= RETAIN_FROM:
             retained |= set(_manifest_files(base, ver))
-    on_disk = sorted(
-        d for d in os.listdir(base)
-        if d.startswith("file-")
-        and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-    )
+    on_disk = _committed_data_files(base)
     out = None
     for rel in on_disk:
         part = _file_stats(spark, base, rel, "file", "x").drop("status")

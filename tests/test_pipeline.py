@@ -149,9 +149,9 @@ def test_idempotent_sink_read_all_skips_torn_batch(spark, tmp_path):
 def test_metrics_listener_reports_per_batch_rows_and_commit(spark, tmp_path):
     """R13 observability (reference per-stage logs P:143-184): the
     pipeline's StreamingQueryListener must report, per micro-batch,
-    rows pulled, rows published (via the observe() hook — foreachBatch
-    sinks have no native output metric), stage durations, and the
-    run's commit status."""
+    rows pulled, rows published (on this Python-processor path, one
+    per row pulled: foreachBatch sinks have no native output metric),
+    stage durations, and the run's commit status."""
     tmp = str(tmp_path)
     _drop(os.path.join(tmp, "in"), 5)
     sink = CollectingSink()
@@ -229,6 +229,83 @@ def test_metrics_listener_counts_only_its_own_query(spark, tmp_path):
     assert listeners() == before
 
 
+def _executed_plan(query) -> str:
+    """The executed plan of the query's last micro-batch."""
+    return query._jsq.streamingQuery().lastExecution().executedPlan().toString()
+
+
+def test_python_processor_batch_plan_has_no_collect_metrics(spark, tmp_path):
+    """The Python path yields one row per input, so the pipeline
+    attaches no observe() there: the batch plan carries no
+    CollectMetrics node, and rows_out is the progress event's
+    numInputRows."""
+    tmp = str(tmp_path)
+    _drop(os.path.join(tmp, "in"), 5)
+    pipe = _pipeline(spark, tmp, CollectingSink(), processor=lambda m: m)
+    query = pipe.process()
+
+    assert "CollectMetrics" not in _executed_plan(query)
+    for b in pipe.metrics.batches:
+        assert b["rows_out"] == b["rows_in"], b
+    assert pipe.metrics.totals()["rows_out"] == 5
+
+
+def test_column_processor_that_filters_reports_observed_rows_out(
+    spark, tmp_path
+):
+    """A column_processor may drop rows, so rows_out there comes from
+    observe(): keeping the even half of 10 messages publishes 5."""
+    from pyspark.sql import functions as F
+
+    tmp = str(tmp_path)
+    _drop(os.path.join(tmp, "in"), 10)
+    sink = CollectingSink()
+    pipe = SparkPipeline(
+        spark=spark,
+        source=FileStreamSource(os.path.join(tmp, "in")),
+        sink=sink,
+        column_processor=lambda df: df.filter(
+            F.get_json_object(F.col("value").cast("string"), "$.i")
+            .cast("int") % 2 == 0),
+        checkpoint_dir=os.path.join(tmp, "ckpt"),
+    )
+    query = pipe.process()
+
+    assert "CollectMetrics" in _executed_plan(query)
+    assert len(sink.rows) == 5
+    totals = pipe.metrics.totals()
+    assert (totals["rows_in"], totals["rows_out"]) == (10, 5), pipe.metrics.batches
+
+
+def test_metrics_totals_report_trigger_latency_backlog_and_rate(
+    spark, tmp_path
+):
+    """Aim-4 fields, derived from the progress events: a bounded run
+    of 100 messages at 20 per pull drains the topic (backlog 0 at the
+    newest event), with trigger p99 >= p50 > 0 and rows/s over the
+    summed trigger time."""
+    topic = str(tmp_path / "in")
+    for i in range(100):
+        publish(topic, json.dumps({"i": i}).encode())
+    pipe = SparkPipeline(
+        spark=spark,
+        source=PubSubStreamSource(topic, bulk_limit=20),
+        sink=CollectingSink(),
+        processor=lambda m: m,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    pipe.process()
+
+    totals = pipe.metrics.totals()
+    assert totals["batches"] >= 5 and totals["rows_in"] == 100, totals
+    assert totals["backlog"] == 0, totals
+    assert totals["trigger_ms_p99"] >= totals["trigger_ms_p50"] > 0, totals
+    trigger_s = sum(b["duration_ms"]["triggerExecution"]
+                    for b in pipe.metrics.batches) / 1e3
+    assert totals["rows_per_s"] == pytest.approx(100 / trigger_s)
+    assert totals["dlq_rate"] == 0
+
+
 def test_bulk_processor_one_call_per_batch(spark, tmp_path):
     """BulkPubSubPipeline parity (P:214-242): processor receives the
     whole batch as a list and returns a same-length list."""
@@ -289,7 +366,9 @@ def test_dead_letter_quarantines_poison_and_batch_commits(spark, tmp_path):
     assert "JSONDecodeError" in quarantined[0]["error"]
     commits = os.listdir(os.path.join(tmp, "ckpt", "commits"))
     assert commits, "batch with quarantined poison must still commit"
-    assert pipe.metrics.totals()["rows_dlq"] == 1
+    totals = pipe.metrics.totals()
+    assert totals["rows_dlq"] == 1
+    assert totals["dlq_rate"] == pytest.approx(1 / 5), pipe.metrics.batches
 
 
 def test_dead_letter_isolates_poison_in_bulk_processor(spark, tmp_path):

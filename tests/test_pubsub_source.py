@@ -263,6 +263,13 @@ def test_stop_during_sink_then_restart_loses_nothing(
             time.sleep(0.1)
         assert stopped.metrics.terminated is not None
         assert stopped.metrics.terminated["exception"] is None
+        # committed reports whether the stopped batch reached the
+        # commit log, whichever way the interrupt fell
+        ckpt = tmp_path / "ckpt"
+        newest = max(int(n) for n in os.listdir(ckpt / "offsets")
+                     if n.isdigit())
+        assert stopped.metrics.terminated["committed"] == (
+            ckpt / "commits" / str(newest)).exists()
     finally:
         stopped.killer.unwatch(query)
         spark.streams.removeListener(stopped.metrics._listener())
